@@ -259,14 +259,13 @@ object Bench {
     // only runs STARTED inside the measured window count, so a slow
     // final progress event from the warmup can neither contaminate nor
     // be confused with the measured run's sums; and the measured
-    // window's end waits on the terminated events of exactly the runs
-    // it started (deterministic, not timing-heuristic).
+    // window's end drains the listener bus, so every event of the runs
+    // it started has been dispatched (deterministic, not
+    // timing-heuristic).
     val progLock = new Object
     val progDur = collection.mutable.Map[String, Long]()
     var progBatches = 0L
     val measuredRuns =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
-    val terminatedRuns =
       java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
     @volatile var capturing = false
     spark.streams.addListener(
@@ -290,29 +289,8 @@ object Bench {
             }
           }
         }
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-          if (measuredRuns.contains(e.runId)) terminatedRuns.add(e.runId)
+        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
       })
-    // listener events arrive on an async bus. By the time this is
-    // called, runOnce has returned: every measured run was started AND
-    // stopped, so every one of its events is already POSTED — draining
-    // the bus is the deterministic wait (round 15, ADVICE r14: the old
-    // terminated>=measured count raced in both directions — a
-    // still-queued FIRST started event made 0<0 read complete, and for
-    // a query running two sequential streams, terminated(run1) could
-    // satisfy the count while run2's started event was still queued).
-    // Fallback if the drain times out (a foreign event storm): the
-    // counting loop, which now also insists on having seen at least one
-    // started event.
-    def awaitMeasuredEvents(): Unit = {
-      if (org.apache.spark.graft.ListenerBusAccess
-            .waitUntilEmpty(spark.sparkContext, 2000)) return
-      val deadline = System.nanoTime() + 2L * 1000 * 1000 * 1000
-      while ((measuredRuns.isEmpty ||
-              terminatedRuns.size < measuredRuns.size) &&
-             System.nanoTime() < deadline) Thread.sleep(10)
-    }
-
     // local-probe knob ONLY (regex, substring-matched): lets a builder
     // iterate on one query family without the 270-query sweep. The
     // driver never sets it — an artifact produced under a filter is a
@@ -337,12 +315,16 @@ object Bench {
     val decadeEnabled =
       sys.env.getOrElse("SPARK_GRAFT_SCALE_DECADE", "1") != "0" && nameFilter.isEmpty
     var decadeError: Option[String] = None
+    // rows01/rows10 are None when the row observation did not arrive:
+    // the member is reported unobserved and its row law is left out of
+    // the gate (a lost listener event is not a plan regression)
     final case class DecadeRow(q: String, reps: Seq[Double], gcMs: Long,
                                minflt: Long, dRssMb: Long,
-                               rows01: Long, rows10: Long) {
+                               rows01: Option[Long], rows10: Option[Long]) {
       def best: Double = {
         val ok = reps.filter(_ >= 0); if (ok.isEmpty) -1.0 else ok.min
       }
+      def unobserved: Boolean = rows01.isEmpty || rows10.isEmpty
     }
     // round 17 (VERDICT r16 #2, carried from r15 #1): every decade run
     // also OBSERVES its output row count — a count(1) collected during
@@ -351,23 +333,17 @@ object Bench {
     // time ratio. Rows are host-noise-immune: a plan/fixture regression
     // moves rows, a bad host window only moves seconds — exactly the
     // adjudicator the r16 ambiguous sf10 readings lacked.
-    def observedQuery(q: String): ((SparkSession, String) => org.apache.spark.sql.DataFrame, () => Long) = {
+    def observedQuery(q: String): ((SparkSession, String) => org.apache.spark.sql.DataFrame, () => Option[Long]) = {
       val obs = org.apache.spark.sql.Observation()
       val fn = (s: SparkSession, d: String) =>
         SparkEntry.queries(q)(s, d).observe(obs,
           org.apache.spark.sql.functions.count(
             org.apache.spark.sql.functions.lit(1)).as("rows"))
-      val read = () =>
-        try {
-          import scala.concurrent.duration._
-          scala.concurrent.Await.result(
-            scala.concurrent.Future(obs.get)(
-              scala.concurrent.ExecutionContext.global), 30.seconds)("rows")
-            .asInstanceOf[Long]
-        } catch { case _: Throwable => -1L }
+      val read = () => org.apache.spark.graft.ListenerBusAccess
+        .observed(spark.sparkContext, obs, 30000L).map(_.getAs[Long]("rows"))
       (fn, read)
     }
-    def decadeRun(q: String): (Double, Long, Long, Long, Long) = {
+    def decadeRun(q: String): (Double, Long, Long, Long, Option[Long]) = {
       val (gc0, _) = gcTotals(); val (mf0, _, rss0) = procStat()
       val (fn, rows) = observedQuery(q)
       val t = runOnce(q, fn, decadeFixture)
@@ -380,9 +356,8 @@ object Bench {
     val decadeMeasured: Option[(Boolean, Seq[DecadeRow])] =
       if (!decadeEnabled) None
       else try {
-        val generated = graft.tools.ProbeScaleDecade
-          .ensureFixture(spark, sfDir, decadeFixture, 10)
-        Some((generated, graft.tools.ProbeScaleDecade.Queries.map { q =>
+        val generated = ScaleDecade.ensureFixture(spark, sfDir, decadeFixture, 10)
+        Some((generated, ScaleDecade.Queries.map { q =>
           // sf0.1-side row count: one observed, UNMEASURED run on the
           // sweep dir (the timed sweep denominator stays untouched)
           val (fn01, rows01f) = observedQuery(q)
@@ -392,7 +367,7 @@ object Bench {
           val (t1, g1, m1, r1, n1) = decadeRun(q)
           val (t2, g2, m2, r2, n2) = decadeRun(q)
           DecadeRow(q, Seq(t1, t2), g1 + g2, math.max(m1, 0) + math.max(m2, 0),
-            math.max(r1, r2), rows01, math.max(n1, n2))
+            math.max(r1, r2), rows01, (n1 ++ n2).maxOption)
         }))
       } catch { case e: Throwable =>
         System.err.println(s"[bench] scale_decade failed: ${e.getMessage}")
@@ -446,14 +421,19 @@ object Bench {
           spark.streams.resetTerminated()
           batchDurMs.set(0L)
           progLock.synchronized { progDur.clear(); progBatches = 0L }
-          measuredRuns.clear(); terminatedRuns.clear()
+          measuredRuns.clear()
           capturing = true
           // capturing stays true through the event wait: a very fast
           // run's started-event could otherwise be processed after
           // runOnce returns and be dropped (no stream starts between
           // runOnce and the wait, so the window admits only our runs)
-          val wall = try { val w = runOnce(name, fn); awaitMeasuredEvents(); w }
-            finally { capturing = false }
+          // runOnce returned, so every event of the measured runs is
+          // already posted: the drain dispatches them all
+          val wall = try {
+            val w = runOnce(name, fn)
+            org.apache.spark.graft.ListenerBusAccess.waitUntilEmpty(spark.sparkContext, 2000)
+            w
+          } finally { capturing = false }
           if (wall >= 0) {
             streamBatchSum(name) = batchDurMs.get() / 1e3
             streamProgress(name) =
@@ -691,7 +671,7 @@ object Bench {
           Some((false, s""""scale_decade":{"ok":false,""" +
             s""""error":"${decadeError.getOrElse("unknown")}"},"""))
         case Some((generated, rows0)) =>
-          val rowLaw = graft.tools.ProbeScaleDecade.rowLaw(10)
+          val rowLaw = ScaleDecade.rowLaw(10)
           val rows = rows0.map { r =>
             val base = resultsMap.get(r.q).filter(_ > 0)
             val over = base.exists(b => r.best < 0 || r.best / b > decadeThreshold)
@@ -701,15 +681,16 @@ object Bench {
               r.copy(reps = r.reps :+ t3, gcMs = r.gcMs + g3,
                 minflt = r.minflt + math.max(m3, 0),
                 dRssMb = math.max(r.dRssMb, r3),
-                rows10 = math.max(r.rows10, n3))
+                rows10 = (r.rows10 ++ n3).maxOption)
             }
           }
           // the gate holds iff BOTH channels pass per member: the time
           // ratio (superlinear-blowup detector, host-noise-tolerant at
-          // 20×) AND the ×k row law (host-noise-immune; round 17)
+          // 20×) AND the ×k row law (host-noise-immune; round 17) —
+          // the latter only where both row counts were observed
           def rowsOk(r: DecadeRow): Boolean =
-            rowLaw.get(r.q).forall(k =>
-              r.rows01 > 0 && r.rows10 == r.rows01 * k)
+            r.unobserved || rowLaw.get(r.q).forall(k =>
+              r.rows01.exists(n => n > 0 && r.rows10.contains(n * k)))
           val ok = rows.forall { r =>
             resultsMap.get(r.q).filter(_ > 0)
               .exists(b => r.best >= 0 && r.best / b <= decadeThreshold) &&
@@ -720,14 +701,15 @@ object Bench {
             f""""${r.q}":{"sf01":$base%.2f,"sf10":${r.best}%.2f,""" +
               f""""reps":$reps,""" +
               f""""ratio":${if (r.best < 0 || base <= 0) -1.0 else r.best / base}%.2f,""" +
-              s""""rows_sf01":${r.rows01},"rows_sf10":${r.rows10},""" +
+              s""""rows_sf01":${r.rows01.getOrElse(-1L)},""" +
+              s""""rows_sf10":${r.rows10.getOrElse(-1L)},""" +
               s""""row_law_x":${rowLaw.getOrElse(r.q, -1L)},""" +
-              s""""rows_ok":${rowsOk(r)},""" +
+              s""""rows_ok":${rowsOk(r)},"rows_unobserved":${r.unobserved},""" +
               s""""gc_ms":${r.gcMs},"minflt":${r.minflt},"d_rss_mb":${r.dRssMb}}"""
           }.mkString("{", ",", "}")
           Some((ok, s""""scale_decade":{"ok":$ok,""" +
             s""""threshold":$decadeThreshold,""" +
-            s""""gen":"${graft.tools.ProbeScaleDecade.GenVersion}",""" +
+            s""""gen":"${ScaleDecade.GenVersion}",""" +
             s""""generated_this_run":$generated,"fixture":"$decadeFixture",""" +
             s""""queries":$qjson},"""))
       }

@@ -97,50 +97,43 @@ class EtlRunner(spark: SparkSession) {
     myStages.clear()
     spark.sparkContext.setJobGroup(myGroup, s"etl:${job.name}")
     spark.sparkContext.addSparkListener(listener)
-    val rowsWritten =
+    val (sent, rowsWritten) =
       try {
         val writer = observed.write
           .mode(saveMode)
           .format(format)
           .options(options)
-        format match {
-          case "jdbc" =>
-            // batched inserts, 2000 rows per batch — parity with the
-            // reference's chunked loader (EtlMain.kt:74); concurrent
-            // connections bounded by partition count (pool-parity with
-            // max 5, DatabaseBean.kt:59).
-            writer.option("batchsize", "2000").option("dbtable", job.write).save()
-            // Spark's v1 JDBC writer does not populate task output
-            // metrics, so listener accounting would report 0 forever.
-            // A successful save() committed every partition, i.e. every
-            // observed row reached the database — the observed count IS
-            // the written count. Listener accounting below covers file
-            // formats only.
-            obs.get("sent").asInstanceOf[Long]
-          case _ =>
-            writer.save(s"$targetDir/${job.write}")
-            // listener events post asynchronously; wait for the counter
-            // to stabilize, up to a 10 s cap (public API only —
-            // listenerBus is private). Task retries can still
-            // double-count (documented at-least-once accounting,
-            // matching the write semantics).
-            val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-            var prev = -1L
-            var stable = 0
-            while (stable < 3 && System.nanoTime() < deadline) {
-              val cur = written.sum()
-              if (cur == prev) stable += 1 else stable = 0
-              prev = cur
-              Thread.sleep(100)
-            }
-            written.sum()
-        }
+        val isJdbc = format == "jdbc"
+        if (isJdbc)
+          // batched inserts, 2000 rows per batch — parity with the
+          // reference's chunked loader (EtlMain.kt:74); concurrent
+          // connections bounded by partition count (pool-parity with
+          // max 5, DatabaseBean.kt:59).
+          writer.option("batchsize", "2000").option("dbtable", job.write).save()
+        else writer.save(s"$targetDir/${job.write}")
+        // Both counters are listener-delivered: the observation completes
+        // on the listener bus, and so do the task-end events that feed
+        // `written`. `observed` drains the bus first, so both are final
+        // here, while the listener is still attached.
+        val sent = org.apache.spark.graft.ListenerBusAccess
+          .observed(spark.sparkContext, obs, 60000L)
+          .map(_.getAs[Long]("sent"))
+          .getOrElse(throw new IllegalStateException(
+            s"etl job ${job.name}: the write finished but its sent-row " +
+              "observation did not arrive within 60 s"))
+        // Spark's v1 JDBC writer does not populate task output metrics,
+        // so listener accounting would report 0 forever. A successful
+        // save() committed every partition, i.e. every observed row
+        // reached the database — the observed count IS the written
+        // count. Listener accounting covers file formats only; there a
+        // failed task attempt reports no records written, so a retried
+        // task is counted once (EtlSpec's retried-write case).
+        (sent, if (isJdbc) sent else written.sum())
       } finally {
         spark.sparkContext.clearJobGroup()
         spark.sparkContext.removeSparkListener(listener)
       }
 
-    val sent = obs.get("sent").asInstanceOf[Long]
     JobResult(job.name, sent, rowsWritten, (System.nanoTime() - t0) / 1e9)
   }
 

@@ -459,16 +459,10 @@ object Dedup {
           least(col("rep"), coalesce(col("nrep"), col("rep"))).as("rep"))
         .observe(obs, count(when(col("rep") =!= col("_old"), lit(1)))
           .as("_chg")))
-      changed =
-        try {
-          import scala.concurrent.duration._
-          scala.concurrent.Await.result(
-            scala.concurrent.Future(obs.get)(
-              scala.concurrent.ExecutionContext.global), 60.seconds)("_chg")
-            .asInstanceOf[Long]
-        } catch { case _: java.util.concurrent.TimeoutException =>
-          updated.filter(col("rep") =!= col("_old")).count()
-        }
+      changed = org.apache.spark.graft.ListenerBusAccess
+        .observed(updated.sparkSession.sparkContext, obs, 60000L)
+        .map(_.getAs[Long]("_chg"))
+        .getOrElse(updated.filter(col("rep") =!= col("_old")).count())
       labels = updated.select("node", "rep")
       iter += 1
     }

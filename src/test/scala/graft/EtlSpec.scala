@@ -169,6 +169,56 @@ class EtlSpec extends AnyFunSuite {
     assert(readBack.columns.forall(c => c == c.toUpperCase))
   }
 
+  test("retried write: a task that fails mid-write is counted once") {
+    // the shared session runs local[4, 3]: partition 0's first attempt
+    // dies after 500 rows reached the writer, the retry succeeds
+    import org.apache.spark.TaskContext
+    val work = Files.createTempDirectory("graft_etl_retry").toString
+    spark.range(0, 4000, 1, 4).as[Long]
+      .mapPartitions { it =>
+        val ctx = TaskContext.get()
+        it.zipWithIndex.map { case (id, i) =>
+          if (ctx.partitionId() == 0 && ctx.attemptNumber() == 0 && i == 500)
+            throw new RuntimeException("first attempt dies mid-write (simulated)")
+          id
+        }
+      }
+      .toDF("id").createOrReplaceTempView("flaky_src")
+    val job = EtlJob(name = "flaky", extract = "SELECT id FROM flaky_src",
+      write = "flaky", mode = "overwrite")
+    val failedAttempts = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.reason != org.apache.spark.Success) failedAttempts.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(seen)
+    // runJob drains the listener bus before returning, so `seen` is final
+    val r = try new EtlRunner(spark).runJob(job, work)
+      finally spark.sparkContext.removeSparkListener(seen)
+    assert(failedAttempts.get == 1)
+    assert(r.rowsSent == 4000)
+    assert(r.rowsWritten == r.rowsSent)
+    assert(r.balanced)
+    assert(spark.read.parquet(s"$work/flaky").count() == 4000)
+  }
+
+  test("ListenerBusAccess.observed: Some after the action, bounded None without it") {
+    import org.apache.spark.graft.ListenerBusAccess
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.functions._
+    val done = Observation("bus_done")
+    spark.range(0, 1234, 1, 4).observe(done, count(lit(1)).as("n"))
+      .write.format("noop").mode("overwrite").save()
+    assert(ListenerBusAccess.observed(spark.sparkContext, done, 30000)
+      .map(_.getAs[Long]("n")).contains(1234L))
+    // observed but never executed: the wait must give up, not hang
+    val never = Observation("bus_never")
+    spark.range(10).observe(never, count(lit(1)).as("n"))
+    val t0 = System.nanoTime()
+    assert(ListenerBusAccess.observed(spark.sparkContext, never, 500).isEmpty)
+    assert((System.nanoTime() - t0) / 1e6 < 5000)
+  }
+
   test("Dataset.observe: accounting metrics ride the write, no second pass") {
     // the reference's row accounting (EtlRunner parity) as Spark-native
     // observed metrics: aggregates accumulate DURING the action instead

@@ -64,6 +64,32 @@ class InventorySpec extends AnyFunSuite {
         s"rows-only rows whose query HAS an oracle: ${stale.mkString(", ")}")
   }
 
+  test("runnable mains are exactly the declared entry points") {
+    // one-off investigation mains live in the change that uses them,
+    // not in the tree: a new main must be added here deliberately
+    import scala.jdk.CollectionConverters._
+    val pkgDecl = "(?m)^package\\s+([\\w.]+)".r
+    val objectDecl = "(?m)^\\s*object\\s+(\\w+)".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val mains = try files.iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        val pkg = pkgDecl.findFirstMatchIn(src).map(_.group(1)).toSeq
+        "def main\\(".r.findAllMatchIn(src).map { m =>
+          // the enclosing object is the last one declared before main
+          val obj = objectDecl.findAllMatchIn(src.substring(0, m.start)).toSeq.last
+          (pkg :+ obj.group(1)).mkString(".")
+        }
+      }.toSet
+      finally files.close()
+    val declared = Set("graft.Main", "graft.Bench", "graft.Verify",
+      "graft.CapabilityMatrix", "graft.tools.DumpPlans")
+    assert(mains == declared,
+      s"undeclared mains: ${(mains -- declared).toSeq.sorted.mkString(", ")}; " +
+        s"declared but missing: ${(declared -- mains).toSeq.sorted.mkString(", ")}")
+  }
+
   test("query names follow the driver's naming contract") {
     // one stable prefix family per tier: aN (ETL parity), qN (SQL
     // surface), sN (streaming), cN (LLM-pipeline), mN (multimodal),
