@@ -25,7 +25,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       // safety net under the round-13 checkpoint lifecycle: operators
       // release superseded rounds themselves and callers release
-      // result-backing cuts (Ckpt.release / releaseIssued), but a
+      // result-backing cuts (Ckpt.releaseResult / releaseIssued), but a
       // caller that drops a reliable-mode result without releasing it
       // would otherwise strand its files in the checkpoint dir forever;
       // with this set the ContextCleaner deletes them when the RDD is
@@ -36,7 +36,7 @@ object GraftSession {
       // round 14: the durable-posture end-to-end proof needs the WHOLE
       // packaged surface (verify sweep + bench) runnable in reliable
       // mode without code edits — the env var feeds the session conf
-      // that CkptChain already resolves (arg > conf > local). Unset =
+      // that CkptChain resolves (conf set → reliable, else local). Unset =
       // unchanged local-checkpoint behavior.
       .config(sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
         .map(d => Map("spark.graft.checkpointDir" -> d))

@@ -2,52 +2,38 @@ package graft.operators
 
 import org.apache.spark.graft.CheckpointDirAccess
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.{DataFrame, GraftCheckpointBridge, SparkSession}
 
 /** Lineage-flattening checkpoint plumbing for the iterative operator
   * families ([[Graph]]'s traversals, [[Dedup.dupClusters]]'s
   * min-label propagation, [[TextAnalysis.bpeMergeTable]]'s merge loop)
-  * — extracted to its own object in round 13 and taught the full block
-  * LIFECYCLE, not just the cut:
+  * and the one-off plan-flattening cuts. Every cut runs the one
+  * materializing body of [[CkptChain]], which picks the backend:
   *
-  *   - '''Backends.''' `local` = `localCheckpoint` (DISK_ONLY by
-  *     default, `spark.graft.graph.checkpointStorage=memdisk` opts back
-  *     into MEMORY_AND_DISK — the round-12 A/B, see [[Graph]]);
-  *     `reliable` = `Dataset.checkpoint()` into the context's
-  *     checkpoint dir. Local checkpoints store blocks on executors with
-  *     NO lineage fallback — one executor loss mid-iteration kills the
-  *     job — so a long-running cluster deployment passes
-  *     `checkpointDir` to the iterative operators and gets the reliable
-  *     backend (write-per-round to durable storage, survives executor
-  *     loss). The two backends are value-identical by construction
-  *     (GraphSpec pins all three storage modes).
+  *   - '''Backend.''' Local DISK_ONLY `localCheckpoint` by default:
+  *     fast, but its blocks have no lineage fallback, so one executor
+  *     loss mid-iteration kills the job. With the session conf
+  *     `spark.graft.checkpointDir` set, every cut is instead a reliable
+  *     checkpoint into that directory (a durable write per cut,
+  *     survives executor loss). The two backends are value-identical
+  *     (GraphSpec and CkptLifecycleSpec pin both).
   *
-  *   - '''Release.''' Before round 13 each iteration checkpointed a new
-  *     relation and abandoned the previous one; blocks were only
-  *     reclaimed when the RDD object happened to be GC'd (the bench's
-  *     r12 artifact counted 184 leaked RDDs it swept up itself). Now
-  *     [[CkptChain]] releases round N−1's storage as soon as round N is
-  *     eagerly materialized — the loop holds O(1) checkpoints instead
-  *     of O(rounds), which is the difference between bounded and
-  *     unbounded storage on a multi-hour 100 TB iterative job.
-  *     [[Ckpt.release]] frees both block-manager blocks (local) and
-  *     checkpoint FILES (reliable — superseded rounds must not
-  *     accumulate in durable storage either).
+  *   - '''Release.''' [[CkptChain]] releases round N−1's storage as
+  *     soon as round N is eagerly materialized, so a loop holds O(1)
+  *     checkpoints instead of O(rounds) — block-manager blocks (local)
+  *     and checkpoint FILES (reliable) alike.
   *
   *   - '''The result-backing checkpoint.''' The final round's
-  *     checkpoint necessarily backs the RETURNED DataFrame — an
-  *     operator cannot release it without destroying its own result, so
-  *     exactly one checkpoint per call (two for [[Graph.triangleCounts]],
-  *     whose result reads both cuts) outlives the call, caller-owned.
+  *     checkpoint backs the RETURNED DataFrame, so exactly one
+  *     checkpoint per call (two for [[Graph.triangleCounts]], whose
+  *     result reads both cuts) outlives the call, caller-owned.
   *     Callers that have fully consumed the result free it with
-  *     [[Ckpt.release]] (or the foreign-leaf-safe [[Ckpt.releaseResult]]);
-  *     harnesses that know ALL outstanding results are consumed (the
-  *     bench, after each query's sink completes) use
-  *     [[Ckpt.releaseIssued]], which frees every graft-issued
-  *     checkpoint still held — block-manager blocks AND reliable-mode
-  *     files (round 14; their paths are recorded at issue time) — and
-  *     leaves foreign blocks alone.
+  *     [[Ckpt.releaseResult]]; harnesses that know ALL outstanding
+  *     results are consumed (the bench, after each query's sink
+  *     completes) use [[Ckpt.releaseIssued]], which frees every
+  *     graft-issued checkpoint still held — blocks AND reliable files
+  *     (their paths are recorded at issue time) — and leaves foreign
+  *     blocks alone.
   */
 object Ckpt {
 
@@ -148,91 +134,28 @@ object Ckpt {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }
 
-  private def track(df: DataFrame): DataFrame = {
+  private[operators] def track(df: DataFrame): DataFrame = {
     backingRdds(df).foreach { r =>
       issued.put(key(r), r.getCheckpointFile.getOrElse(""))
     }
     df
   }
 
-  /** Local (executor-block) checkpoint cut. DISK_ONLY blocks by default
-    * — serialized through the OS page cache, flat RSS (the round-12 A/B
-    * vs MEMORY_AND_DISK, numbers in PLANS.md; `memdisk` opts back in).
-    * Fast and correct, but NOT durable: no lineage fallback, so an
-    * executor loss mid-job is unrecoverable — iterative operators
-    * expose `checkpointDir` to switch to [[reliable]] for cluster runs. */
-  def local(df: DataFrame): DataFrame = track(
-    if (df.sparkSession.conf
-        .getOption("spark.graft.graph.checkpointStorage").contains("memdisk"))
-      df.localCheckpoint()
-    else df.localCheckpoint(true, StorageLevel.DISK_ONLY))
-
-  /** [[local]] that also returns the cut's row count — taken from the
-    * eager checkpoint's OWN materializing job (round 17, VERDICT r16
-    * #6), so convergence-checked loops pay one job per round, not a cut
-    * job plus a count job. Same backend selection as [[local]]. */
-  def localCounted(df: DataFrame): (DataFrame, Long) = {
-    val level =
-      if (df.sparkSession.conf
-          .getOption("spark.graft.graph.checkpointStorage").contains("memdisk"))
-        None
-      else Some(StorageLevel.DISK_ONLY)
-    val (cut, n) = org.apache.spark.sql.GraftCheckpointBridge
-      .cutCounted(df, reliable = false, level)
-    (track(cut), n)
-  }
-
-  /** Reliable checkpoint cut into the context's checkpoint dir (the
-    * caller — normally [[CkptChain]], which holds [[reliableLock]] and
-    * exact-restores the application's prior dir around the cut — has
-    * set it). Survives executor loss at the cost of a durable write per
-    * cut.
-    *
-    * Known cost shape (probed round 13, tools/ProbeReliable): eager
-    * `Dataset.checkpoint()` on an unpersisted plan runs the result
-    * stage twice — once for the eager count, once for the
-    * checkpoint-file write — but shuffle map stages are REUSED, so the
-    * recompute is the final stage only. Staging through a local
-    * checkpoint first (compute once → blocks, file-write reads blocks)
-    * measured as a wash-to-slightly-worse at sf0.1 (plain 6.43 s vs
-    * staged 6.74 on the c57 loop, identical checksums): the saved
-    * final-stage recompute is repaid in block write+read. Kept plain
-    * per the measured-win-only rule. */
-  def reliable(df: DataFrame): DataFrame = track(df.checkpoint())
-
-  /** [[reliable]] with the materializing count returned (see
-    * [[localCounted]]). Caller ([[CkptChain.reliableCut]]) holds
-    * [[reliableLock]] and has pointed the context's checkpoint dir. */
-  def reliableCounted(df: DataFrame): (DataFrame, Long) = {
-    val (cut, n) = org.apache.spark.sql.GraftCheckpointBridge
-      .cutCounted(df, reliable = true, None)
-    (track(cut), n)
-  }
-
-  /** One-off conf-aware cut for the NON-iterative plan-flattening sites
+  /** One-off cut for the NON-iterative plan-flattening sites
     * (triangleCounts' edge/orientation cuts, neighborJaccard's dedup,
-    * clusterMedoids' verified-pair cut, s13's index-lifetime cut):
-    * local by default, reliable into `spark.graft.checkpointDir` when
-    * the session conf is set — so the one-conf-line durable posture
-    * covers EVERY graft checkpoint, not only the iterative chains (a
-    * local cut truncates lineage, so on a cluster an executor loss
-    * after the cut kills the job exactly like a mid-loop loss would).
-    * Same lock/exact-restore discipline as a chain cut.
+    * clusterMedoids' verified-pair cut, s13's index-lifetime cut): a
+    * throwaway one-cut [[CkptChain]], so the same backend choice —
+    * local, or reliable under `spark.graft.checkpointDir` — covers
+    * EVERY graft checkpoint (a local cut truncates lineage, so on a
+    * cluster an executor loss after the cut kills the job exactly like
+    * a mid-loop loss would).
     *
-    * Each call deliberately mints its OWN UUID subdir (a throwaway
-    * one-cut chain) rather than sharing a process-lifetime subdir per
+    * Each call mints its OWN UUID subdir rather than sharing one per
     * (app, conf-dir): the released-when-empty cleanup in [[deleteFile]]
-    * already reduces the residue of per-call isolation to zero, and a
-    * SHARED subdir would couple unrelated results' lifecycles — a
-    * sweep that observes "this subdir is empty, delete it" racing a
-    * concurrent cut is benign (non-recursive delete fails, the writer
-    * re-mkdirs), but a shared dir makes every such window concurrent
-    * with every other cut in the process instead of only this call's.
-    * Isolation also keeps the layout identical to the public
-    * `setCheckpointDir` contract (one UUID level per establishment),
-    * so external tooling that walks checkpoint dirs sees one shape. */
+    * reduces the residue of per-call isolation to zero, and a shared
+    * subdir would couple unrelated results' lifecycles. */
   def cut(df: DataFrame): DataFrame =
-    new CkptChain(df.sparkSession, None).cut("cut")(df)
+    new CkptChain(df.sparkSession).cut("cut")(df)
 
   /** Free one checkpoint RDD's storage: block-manager blocks (local
     * mode; no-op for reliable cuts, which persist nothing) and the
@@ -248,11 +171,10 @@ object Ckpt {
     try {
       val fs = p.getFileSystem(hadoopConf)
       fs.delete(p, true)
-      // the rdd-N dir's parent is a per-chain UUID subdir (minted by
-      // reliableCut, or by the public setCheckpointDir for non-graft
-      // checkpoints a full release sweeps) — removing the LAST rdd dir
-      // must remove the now-empty parent too (ADVICE r14: a reliable-
-      // mode 270-query sweep left hundreds of empty UUID dirs). The
+      // the rdd-N dir's parent is the per-chain UUID subdir minted by
+      // CkptChain — removing the LAST rdd dir must remove the now-empty
+      // parent too (ADVICE r14: a reliable-mode 270-query sweep left
+      // hundreds of empty UUID dirs). The
       // non-recursive delete fails harmlessly if a concurrent cut
       // repopulated it between the emptiness check and the delete; a
       // later cut that still holds the path re-mkdirs it on write.
@@ -262,31 +184,15 @@ object Ckpt {
     } catch { case _: java.io.IOException => () }
   }
 
-  /** Release the storage behind a checkpointed DataFrame — block-manager
-    * blocks (local mode) and checkpoint files (reliable mode) of EVERY
-    * checkpoint the plan depends on, graft-issued or not. The DataFrame
-    * (and any view built on it) is unusable afterwards: local-
-    * checkpointed data has no lineage to recompute from and reliable
-    * files are deleted. Call only once the result is fully consumed.
-    * Harnesses sweeping results they did not build should prefer
-    * [[releaseResult]], which skips foreign `LogicalRDD` leaves. */
-  def release(df: DataFrame): Unit = {
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    backingRdds(df).foreach { rdd =>
-      issued.remove(key(rdd))
-      free(rdd, conf)
-    }
-  }
-
-  /** [[release]] restricted to graft-ISSUED checkpoints: frees exactly
-    * the backing leaves this library created (registry hit) and leaves
-    * any other `LogicalRDD` leaf — e.g. a cached fixture the caller
-    * built from an RDD — untouched. Deterministic for BOTH backends
-    * (blocks unpersisted, reliable files deleted), which makes it the
-    * right per-query sweep for harnesses: under the one-conf-line
-    * `spark.graft.checkpointDir` posture every result-backing cut is
-    * durable FILES that a persistent-RDD sweep would never see.
-    * Returns the number of checkpoints freed. */
+  /** Release the storage behind a consumed result: frees exactly the
+    * backing `LogicalRDD` leaves this library created (registry hit) —
+    * blocks unpersisted, reliable files deleted — and leaves any other
+    * leaf, e.g. a cached fixture the caller built from an RDD,
+    * untouched. The DataFrame (and any view built on it) is unusable
+    * afterwards: local-checkpointed data has no lineage to recompute
+    * from and reliable files are deleted. [[CkptChain]] frees its
+    * superseded rounds through the same path. Returns the number of
+    * checkpoints freed. */
   def releaseResult(df: DataFrame): Int = {
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
     var n = 0
@@ -352,46 +258,41 @@ object Ckpt {
   def issuedCount: Int = issued.size()
 }
 
-/** One operator call's chain of per-round checkpoints. `cut(slot)(df)`
-  * checkpoints `df` eagerly (backend per `checkpointDir`) under a named
-  * slot and RELEASES the slot's previous checkpoint — safe because the
-  * successor is fully materialized before the predecessor's storage is
-  * dropped, so nothing can ever need to re-read it. A loop that cuts
-  * the same slot each round therefore holds O(1) checkpoints instead of
-  * O(rounds). `close(keep*)` releases every still-held slot except the
-  * ones backing the returned result (those are caller-owned — see
-  * [[Ckpt]]'s lifecycle note).
+/** One operator call's chain of per-round checkpoints.
+  * `cutCounted(slot)(df)` checkpoints `df` eagerly under a named slot,
+  * returns it with its row count, and RELEASES the slot's previous
+  * checkpoint — safe because the successor is fully materialized before
+  * the predecessor's storage is dropped, so nothing can ever need to
+  * re-read it. A loop that cuts the same slot each round therefore
+  * holds O(1) checkpoints instead of O(rounds). `close(keep*)` releases
+  * every still-held slot except the ones backing the returned result
+  * (those are caller-owned — see [[Ckpt]]'s lifecycle note).
   *
-  * Backend resolution: the per-call `checkpointDir` argument wins; when
-  * it is None, the session conf `spark.graft.checkpointDir` (if set)
-  * supplies the reliable directory — so a cluster deployment turns the
-  * WHOLE iterative family durable with one conf line, without editing
-  * every call site (the packaged queries all call with defaults);
-  * otherwise the local backend applies.
+  * Backend: reliable into the session conf `spark.graft.checkpointDir`
+  * when it is set on the operator's session — one conf line turns the
+  * WHOLE family durable without editing any call site — otherwise
+  * local DISK_ONLY blocks. Both run the same one-job materializing
+  * body, [[org.apache.spark.sql.GraftCheckpointBridge.cutCounted]].
   *
   * Reliable mode routes through the context-global `setCheckpointDir`
   * state; every cut runs under a process-wide lock as
   * [set this chain's dir → eager checkpoint → exact-restore the prior
-  * value] (round 14, was set-at-construction/restore-at-close with a
-  * documented-only race). Two concurrent reliable-mode chains with
-  * DIFFERENT dirs therefore place every cut correctly — their durable
-  * writes serialize on the lock — and the application's own checkpoint
-  * dir is untouched outside cut windows, INCLUDING the had-none case:
-  * the exact restore puts back `None` rather than leaving graft's dir
-  * set (the public API has no unset — see
+  * value]. Two concurrent chains whose sessions set DIFFERENT dirs
+  * therefore place every cut correctly — their durable writes
+  * serialize on the lock — and the application's own checkpoint dir is
+  * untouched outside cut windows, INCLUDING the had-none case: the
+  * exact restore puts back `None` rather than leaving graft's dir set
+  * (the public API has no unset — see
   * [[org.apache.spark.graft.CheckpointDirAccess]]). */
-private[graft] final class CkptChain(spark: SparkSession,
-                                     checkpointDir: Option[String]) {
-  private val dir: Option[String] =
-    checkpointDir.orElse(spark.conf.getOption("spark.graft.checkpointDir"))
+private[graft] final class CkptChain(spark: SparkSession) {
+  private val dir: Option[String] = spark.conf.getOption("spark.graft.checkpointDir")
   // the chain's UUID subdir under `dir`, created by the first cut (the
   // public setCheckpointDir mints one per call; reusing it keeps all of
   // one call's rounds under a single subdir)
   private var ourSub: Option[String] = None
   private var held = Map.empty[String, DataFrame]
 
-  private def reliableCut[A](d: String, df: DataFrame,
-                             cut: DataFrame => A): A =
+  private def inOwnDir[A](d: String)(cut: => A): A =
     Ckpt.reliableLock.synchronized {
       val sc = spark.sparkContext
       val prior = CheckpointDirAccess.get(sc)
@@ -410,29 +311,23 @@ private[graft] final class CkptChain(spark: SparkSession,
         s
       }
       CheckpointDirAccess.restore(sc, Some(sub))
-      try cut(df)
+      try cut
       finally CheckpointDirAccess.restore(sc, prior)
     }
 
-  def cut(slot: String)(df: DataFrame): DataFrame = {
-    val cur = dir match {
-      case Some(d) => reliableCut(d, df, Ckpt.reliable)
-      case None    => Ckpt.local(df)
-    }
-    held.get(slot).foreach(Ckpt.release)
-    held += slot -> cur
-    cur
-  }
+  /** [[cutCounted]] without the count. */
+  def cut(slot: String)(df: DataFrame): DataFrame = cutCounted(slot)(df)._1
 
-  /** [[cut]] that also returns the cut's row count, read off the eager
-    * checkpoint's own materializing job (round 17, VERDICT r16 #6) —
-    * the one-job-per-round form for convergence-checked loops. */
+  /** Cut `df` into `slot`, returning the cut and its row count, read off
+    * the checkpoint's own materializing job — one job per cut on both
+    * backends, so a convergence-checked loop pays one job per round. */
   def cutCounted(slot: String)(df: DataFrame): (DataFrame, Long) = {
     val (cur, n) = dir match {
-      case Some(d) => reliableCut(d, df, Ckpt.reliableCounted)
-      case None    => Ckpt.localCounted(df)
+      case Some(d) => inOwnDir(d)(GraftCheckpointBridge.cutCounted(df, reliable = true))
+      case None    => GraftCheckpointBridge.cutCounted(df, reliable = false)
     }
-    held.get(slot).foreach(Ckpt.release)
+    Ckpt.track(cur)
+    held.get(slot).foreach(Ckpt.releaseResult)
     held += slot -> cur
     (cur, n)
   }
@@ -445,7 +340,7 @@ private[graft] final class CkptChain(spark: SparkSession,
     * restores it exactly. */
   def close(keep: String*): Unit = {
     val ks = keep.toSet
-    held.foreach { case (slot, df) => if (!ks.contains(slot)) Ckpt.release(df) }
+    held.foreach { case (slot, df) => if (!ks.contains(slot)) Ckpt.releaseResult(df) }
     held = held.filter { case (slot, _) => ks.contains(slot) }
   }
 }

@@ -390,31 +390,19 @@ object Dedup {
     * O(component diameter) rounds — dup clusters are shallow, so this
     * is a handful of shuffles on (node, label) pairs, never materializing
     * anything super-linear. Each round the growing plan lineage is cut
-    * with a checkpoint (the standard Spark iterative-graph pattern):
-    * a LOCAL checkpoint by default (round 12: DISK_ONLY-backed via the
-    * shared [[Ckpt]] hook — serialized blocks through the OS page
-    * cache, flat RSS; `spark.graft.graph.checkpointStorage=memdisk`
-    * restores memory-backed blocks; either way an executor loss
-    * mid-iteration kills the job), or a RELIABLE `checkpoint()` when
-    * `checkpointDir` is given (survives executor loss; the right
-    * choice for a long-running 100 TB job, at the cost of a write to
-    * reliable storage per round). Round 13: each round's superseded
-    * label checkpoint is RELEASED as soon as the new round
-    * materializes (the [[CkptChain]] contract — O(1) checkpoints held,
-    * not O(rounds)); the cut pair relation is released before
-    * returning, so exactly the final label checkpoint (which backs the
-    * returned DataFrame) outlives the call — callers free it with
-    * [[Ckpt.release]] once consumed. */
+    * with a checkpoint (the standard Spark iterative-graph pattern)
+    * through a [[CkptChain]] — local or reliable per [[Ckpt]]. Each
+    * round's superseded label checkpoint is RELEASED as soon as the new
+    * round materializes (O(1) checkpoints held, not O(rounds)); the cut
+    * pair relation is released before returning, so exactly the final
+    * label checkpoint (which backs the returned DataFrame) outlives the
+    * call — callers free it with [[Ckpt.releaseResult]] once consumed. */
   /** `pairs` must carry `id_a`/`id_b` columns (the shape every pair
     * generator in this file emits). The node set is `allNodes` ∪ the
     * pair endpoints, so an id appearing only in `pairs` still gets
     * labeled (and carries transitivity) rather than silently vanishing. */
-  def dupClusters(pairs: DataFrame, allNodes: DataFrame, idCol: String,
-                  checkpointDir: Option[String] = None): DataFrame = {
-    // backend per checkpointDir, shared with the Graph iterative family
-    // (round 12: DISK_ONLY default, `memdisk` opt-out — A/B'd on
-    // pagerank/kcore AND on this CC loop via tools/ProbeMedoid)
-    val ch = new CkptChain(pairs.sparkSession, checkpointDir)
+  def dupClusters(pairs: DataFrame, allNodes: DataFrame, idCol: String): DataFrame = {
+    val ch = new CkptChain(pairs.sparkSession)
     // a failure mid-loop — including the non-convergence require below —
     // must not strand held rounds (in reliable mode: durable files with
     // no owner): release everything and rethrow

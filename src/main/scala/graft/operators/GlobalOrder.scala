@@ -39,7 +39,18 @@ object GlobalOrder {
 
   /** `df` plus `rankOut` = global row_number() over `order` and
     * (optionally) `cumOut` = running sum of `sumSrc` (an integral
-    * column) over the same order, currentRow-inclusive. */
+    * column) over the same order, currentRow-inclusive.
+    *
+    * Fails loudly instead of diverging from the naive window:
+    *   - the rank column is IntegerType like `row_number()`; past
+    *     `Int.MaxValue` rows it would wrap, so [[offsets]] throws an
+    *     `ArithmeticException` at the driver instead;
+    *   - the running-sum column must hold no nulls. A null at the start
+    *     of a partition makes the local running sum null, and null plus
+    *     the partition offset stays null where the naive window carries
+    *     the preceding sum. The boundary aggregation counts nulls in the
+    *     same job and throws an `IllegalArgumentException` if any are
+    *     found; callers `coalesce` first if nulls should count as 0. */
   def withRankAndRunningSum(df: DataFrame, order: Seq[Column],
                             rankOut: Option[String],
                             sum2: Option[(String, String)]): DataFrame = {
@@ -63,20 +74,24 @@ object GlobalOrder {
     val staged = Ckpt.cut(withLocal)
     // phase 2: boundary table → preceding-partition offsets (driver-side
     // over ≤ #partitions rows — bounded metadata, not data)
-    val aggs = Seq(count(lit(1)).as("_gn")) ++
-      sum2.map { case (src, _) => sum(col(src)).as("_gs") }
-    val bounds = staged.groupBy(col("_gp")).agg(aggs.head, aggs.tail: _*)
-      .orderBy("_gp").collect()
-    var rOff = 0L
-    var sOff = 0L
-    val offsets = bounds.map { r =>
-      val row = (r.getInt(0), rOff, sOff)
-      rOff += r.getLong(1)
-      if (sum2.nonEmpty && !r.isNullAt(2)) sOff += r.getLong(2)
-      row
-    }.toSeq
+    val aggs = Seq(count(lit(1)).as("_gn")) ++ sum2.toSeq.flatMap { case (src, _) =>
+      Seq(sum(col(src)).as("_gs"),
+        count(when(col(src).isNull, lit(1))).as("_gz"))
+    }
+    val offsetRows = try {
+      val bounds = staged.groupBy(col("_gp")).agg(aggs.head, aggs.tail: _*)
+        .orderBy("_gp").collect()
+      sum2.foreach { case (src, _) =>
+        val nulls = bounds.map(_.getLong(3)).sum
+        require(nulls == 0, s"running-sum column '$src' holds $nulls null " +
+          "value(s); coalesce it first if nulls should count as 0")
+      }
+      offsets(bounds.map(r =>
+        (r.getInt(0), r.getLong(1), if (sum2.nonEmpty) r.getLong(2) else 0L)).toSeq,
+        rank = rankOut.nonEmpty)
+    } catch { case t: Throwable => Ckpt.releaseResult(staged); throw t }
     import spark.implicits._
-    val offDf = offsets.toDF("_gp", "_gro", "_gso")
+    val offDf = offsetRows.toDF("_gp", "_gro", "_gso")
     val joined = staged.join(broadcast(offDf), "_gp")
     val withRank = rankOut.fold(joined)(n =>
       joined.withColumn(n, (col("_glr") + col("_gro")).cast("int")))
@@ -86,9 +101,20 @@ object GlobalOrder {
     withCum.drop("_gp", "_glr", "_glc", "_gro", "_gso")
   }
 
-  /** Global row_number() over `order` as `out` — the rank-only form. */
-  def withRowNumber(df: DataFrame, order: Seq[Column], out: String): DataFrame =
-    withRankAndRunningSum(df, order, Some(out), None)
+  /** Preceding-partition offsets from the boundary table: for each
+    * (partition, rows, sum) in partition order, the partition with the
+    * row count and sum of every partition before it. With `rank`, a
+    * total above `Int.MaxValue` rows throws instead of letting the
+    * IntegerType rank wrap. */
+  private[graft] def offsets(bounds: Seq[(Int, Long, Long)],
+                             rank: Boolean): Seq[(Int, Long, Long)] = {
+    val total = bounds.map(_._2).sum
+    if (rank && total > Int.MaxValue)
+      throw new ArithmeticException(
+        s"global rank over $total rows overflows the IntegerType rank column")
+    bounds.zip(bounds.scanLeft((0L, 0L)) { case ((r, s), (_, n, x)) => (r + n, s + x) })
+      .map { case ((p, _, _), (rOff, sOff)) => (p, rOff, sOff) }
+  }
 
   /** Global running sum (currentRow-inclusive) of `sumSrc` over `order`
     * as `out` — the cumsum-only form. */

@@ -9,26 +9,14 @@ import org.apache.spark.sql.functions._
   * what link-graph crawl-frontier analysis and entity-neighborhood
   * expansion actually ask.
   *
-  * Checkpoint posture (round 13 — see [[Ckpt]] for the full lifecycle):
-  * every iterative member takes an optional `checkpointDir`. `None`
-  * (default) cuts lineage with LOCAL checkpoints — DISK_ONLY blocks by
-  * default, `spark.graft.graph.checkpointStorage=memdisk` opts back
-  * into MEMORY_AND_DISK (the round-12 A/B: DISK_ONLY measured
-  * flat-to-better at 8 GiB and 3 GiB heaps with 2-4× lower GC,
-  * tools/ProbeCheckpointStorage, PLANS.md) — fast, but an executor
-  * loss mid-iteration is unrecoverable because local checkpoints have
-  * no lineage fallback. `Some(dir)` switches every cut to a RELIABLE
-  * `checkpoint()` into `dir` — the posture a multi-hour 100 TB
-  * PageRank ships with: each round persists to durable storage and the
-  * job survives executor loss. All backends are value-identical
-  * (GraphSpec pins local-disk / memdisk / reliable-dir).
-  *
+  * Checkpoints: the iterative members cut lineage every round through
+  * a [[CkptChain]] — local DISK_ONLY blocks by default, reliable files
+  * under the session conf `spark.graft.checkpointDir` (see [[Ckpt]]).
   * Superseded rounds are released as soon as their successor
-  * materializes (the [[CkptChain]] contract), so a loop holds O(1)
-  * checkpoints — not O(rounds) — in block storage (local) or the
-  * checkpoint dir (reliable). The single final cut that backs the
-  * returned DataFrame outlives the call by necessity; callers free it
-  * with [[Ckpt.release]] once the result is consumed.
+  * materializes, so a loop holds O(1) checkpoints, not O(rounds). The
+  * single final cut that backs the returned DataFrame outlives the
+  * call by necessity; callers free it with [[Ckpt.releaseResult]] once
+  * the result is consumed.
   */
 object Graph {
 
@@ -61,10 +49,9 @@ object Graph {
     * exchange, never answers. */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
               start: String, maxHops: Int,
-              edgesDistinctDisjoint: Boolean = false,
-              checkpointDir: Option[String] = None): DataFrame = {
+              edgesDistinctDisjoint: Boolean = false): DataFrame = {
     require(maxHops >= 0 && maxHops <= 32, s"unreasonable maxHops $maxHops")
-    val ch = new CkptChain(edges.sparkSession, checkpointDir)
+    val ch = new CkptChain(edges.sparkSession)
     // a mid-loop failure must not strand held rounds (in reliable mode:
     // durable files with no owner) — release everything and rethrow
     try {
@@ -133,11 +120,10 @@ object Graph {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int, damping: Double = 0.85,
                undirected: Boolean = true,
-               edgesDistinctDisjoint: Boolean = false,
-               checkpointDir: Option[String] = None): DataFrame = {
+               edgesDistinctDisjoint: Boolean = false): DataFrame = {
     require(iters >= 1 && iters <= 32, s"unreasonable iters $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    val ch = new CkptChain(edges.sparkSession, checkpointDir)
+    val ch = new CkptChain(edges.sparkSession)
     // a mid-loop failure must not strand held rounds — release, rethrow
     try {
     val raw = edges
@@ -328,11 +314,13 @@ object Graph {
     * buckets of raw size <= cap — exactly the old `count <= maxItemDeg`
     * keep-filter — and its strict `id_a < id_b` under the id type's
     * natural ordering matches the join's `x.e < y.e`. Null item keys
-    * are filtered first (the equi-join never matched them; the exec
-    * would bucket them together). */
+    * and null entity ids are filtered first, once, before both tiers:
+    * the equi-join never matched a null item nor paired a null entity
+    * (`x.e < y.e` is null), while the exec would bucket null items
+    * together and count a null entity toward a bucket's capped size. */
   private def pairsFromDeduped(b: DataFrame, minShared: Long,
                                maxItemDeg: Long): DataFrame = {
-    val deduped = b.filter(col("i").isNotNull)
+    val deduped = b.filter(col("i").isNotNull && col("e").isNotNull)
     // a cap above Int.MaxValue is semantically "no prune" — route it to
     // the unbounded path instead of failing (ADVICE r16)
     val paired =
@@ -393,11 +381,10 @@ object Graph {
     * discipline), each released when the next round materializes. No
     * driver-side state, no global sort. */
   def kCoreBounded(edges: DataFrame, srcCol: String, dstCol: String,
-                   k: Int, rounds: Int,
-                   checkpointDir: Option[String] = None): DataFrame = {
+                   k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1 && rounds <= 64, s"unreasonable rounds $rounds")
-    val ch = new CkptChain(edges.sparkSession, checkpointDir)
+    val ch = new CkptChain(edges.sparkSession)
     // a mid-loop failure must not strand held rounds — release, rethrow
     try {
     // self-loop filter AFTER the symmetrizing union: filtering only the

@@ -177,7 +177,7 @@ object TextAnalysis {
     // table is a driver-local literal relation, not a view over any
     // checkpoint — close() releases EVERYTHING before returning: this
     // operator holds zero checkpoint storage after the call
-    val ch = new CkptChain(spark, None)
+    val ch = new CkptChain(spark)
     // a failure mid-loop — including the exhausted-pairs require below —
     // must not strand held rounds: release everything and rethrow
     try {

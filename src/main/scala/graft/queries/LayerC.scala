@@ -1438,16 +1438,14 @@ object LayerC {
     // standard combiner. The rank windows are over 50-row model-sized
     // relations (declared exception to the no-global-window rule).
     "c53_rrf_fusion" -> { (s, dir) =>
-      // round 17 (VERDICT r16 #4): the lexical rank goes through the
-      // two-phase GlobalOrder rank — the input is limit(50)-bounded so
-      // the old global window was harmless, but this keeps the "No
-      // Partition Defined" single-partition WindowExec out of every
-      // declared query path uniformly
-      val lex = graft.operators.GlobalOrder.withRowNumber(
-          TextAnalysis.bm25Rank(docs(s, dir), "doc_id", "text",
-            Seq("vector", "hash", "stream"), k = 50),
-          Seq(desc("bm25"), asc("doc_id")), "rank")
-        .select(col("doc_id"), col("rank"))
+      // plain global window: bm25Rank is limit(50)-bounded, so the
+      // single-partition WindowExec sorts 50 rows — cheaper than
+      // GlobalOrder's eager cut + boundary collect + broadcast join
+      val lex = TextAnalysis.bm25Rank(docs(s, dir), "doc_id", "text",
+          Seq("vector", "hash", "stream"), k = 50)
+        .select(col("doc_id"), row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .orderBy(desc("bm25"), asc("doc_id"))).as("rank"))
       val e = embs(s, dir)
       val vec = Similarity.bruteForceKnn(e, e.filter(col("vec_id") === 0),
           "vec_id", "embedding", 50)

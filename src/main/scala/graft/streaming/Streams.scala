@@ -471,7 +471,7 @@ object Streams {
     *
     * URI-schemed base values (`hdfs://nn/ckpt`, `s3a://bucket/ckpt`)
     * resolve through Hadoop Path/FileSystem, exactly like the batch
-    * side's reliableCut resolves the SAME conf key (ADVICE r15:
+    * side's CkptChain resolves the SAME conf key (ADVICE r15:
     * java.nio.Paths would silently turn them into a relative LOCAL
     * dir, defeating the one-conf-line durable posture on a cluster).
     * Scheme-less values are local paths by definition and keep the

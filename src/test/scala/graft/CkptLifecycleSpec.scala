@@ -1,8 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
-import graft.operators.{Ckpt, Dedup, Graph, TextAnalysis}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.{Ckpt, CkptChain, Dedup, Graph, TextAnalysis}
 
 /** Round-13 checkpoint LIFECYCLE pins (the r12 verdict's top item):
   *
@@ -10,22 +10,38 @@ import graft.operators.{Ckpt, Dedup, Graph, TextAnalysis}
   *      checkpoint themselves — after a call returns, exactly the
   *      result-backing cut(s) remain persisted, no matter how many
   *      rounds ran (O(1) storage held, not O(rounds));
-  *   2. `Ckpt.release(result)` frees those too — a caller that has
-  *      consumed the result can return storage to baseline;
-  *   3. the reliable `checkpointDir` backend is value-identical to the
-  *      local backends AND deletes superseded round FILES from the
-  *      checkpoint dir as it goes (durable storage must not accumulate
-  *      either).
+  *   2. `Ckpt.releaseResult(result)` frees those too — a caller that
+  *      has consumed the result can return storage to baseline;
+  *   3. the reliable backend (session conf `spark.graft.checkpointDir`)
+  *      is value-identical to the local backend AND deletes superseded
+  *      round FILES from the checkpoint dir as it goes (durable storage
+  *      must not accumulate either);
+  *   4. a cut runs ONE Spark job on either backend.
   */
 class CkptLifecycleSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def edges = Seq(
+  private def edgesIn(s: SparkSession) = s.createDataFrame(Seq(
     ("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("a", "c"), ("x", "y")
-  ).toDF("src", "dst")
-  private def kedges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
-    (3L, 4L), (4L, 5L), (5L, 6L)).toDF("a", "b")
+  )).toDF("src", "dst")
+  private def kedgesIn(s: SparkSession) = s.createDataFrame(Seq(
+    (1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L), (4L, 5L),
+    (5L, 6L))).toDF("a", "b")
+  private def edges = edgesIn(spark)
+  private def kedges = kedgesIn(spark)
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+  private def deleteDir(dir: String): Unit =
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+
+  /** Run `body` with `spark.graft.checkpointDir` set to `dir` on `s`
+    * (the shared session by default), unsetting it afterwards. */
+  private def underConf[A](dir: String, s: SparkSession = spark)(body: => A): A = {
+    s.conf.set("spark.graft.checkpointDir", dir)
+    try body finally s.conf.unset("spark.graft.checkpointDir")
+  }
 
   private def persistedIds: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -40,9 +56,9 @@ class CkptLifecycleSpec extends AnyFunSuite {
     val added = persistedIds -- base
     assert(added.size == expectHeld,
       s"expected $expectHeld result-backing checkpoint(s), found ${added.size}")
-    Ckpt.release(out)
+    Ckpt.releaseResult(out)
     assert((persistedIds -- base).isEmpty,
-      "Ckpt.release(result) must return storage to baseline")
+      "Ckpt.releaseResult(result) must return storage to baseline")
     rows
   }
 
@@ -98,7 +114,7 @@ class CkptLifecycleSpec extends AnyFunSuite {
     assert((persistedIds -- base).isEmpty)
   }
 
-  // ---- reliable checkpointDir backend ----
+  // ---- reliable backend (spark.graft.checkpointDir) ----
 
   private def rddDirCount(root: String): Int = {
     val p = java.nio.file.Paths.get(root)
@@ -114,16 +130,19 @@ class CkptLifecycleSpec extends AnyFunSuite {
   test("reliable checkpointDir: value-identical to local backends, " +
     "superseded round files deleted, release empties the dir, " +
     "nothing persisted in the block manager") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-").toString
+    val dir = tempDir("graft-ckpt-")
     try {
       val base = persistedIds
-      val localV = Seq(
-        Graph.pageRank(edges, "src", "dst", iters = 3),
-        Graph.bfsHops(edges, "src", "dst", "a", maxHops = 10),
-        Graph.kCoreBounded(kedges, "a", "b", k = 2, rounds = 3),
-        Dedup.dupClusters(Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b"),
-          (1L to 5L).toDF("doc_id"), "doc_id")
-      ).map { df => val r = df.collect().map(_.toSeq).toSet; Ckpt.release(df); r }
+      def ops: Seq[() => DataFrame] = Seq(
+        () => Graph.pageRank(edges, "src", "dst", iters = 3),
+        () => Graph.bfsHops(edges, "src", "dst", "a", maxHops = 10),
+        () => Graph.kCoreBounded(kedges, "a", "b", k = 2, rounds = 3),
+        () => Dedup.dupClusters(Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b"),
+          (1L to 5L).toDF("doc_id"), "doc_id"))
+      val localV = ops.map { op =>
+        val df = op(); val r = df.collect().map(_.toSeq).toSet
+        Ckpt.releaseResult(df); r
+      }
       assert((persistedIds -- base).isEmpty)
 
       def withDirCheck(df: DataFrame, expectDirs: Int): Set[Seq[Any]] = {
@@ -133,30 +152,19 @@ class CkptLifecycleSpec extends AnyFunSuite {
         assert(rddDirCount(dir) == expectDirs,
           s"checkpoint dir must hold exactly $expectDirs rdd dirs " +
             s"after the call, found ${rddDirCount(dir)}")
-        Ckpt.release(df)
+        Ckpt.releaseResult(df)
         assert(rddDirCount(dir) == 0,
           "release must delete the result-backing checkpoint files")
         rows
       }
-      val relV = Seq(
-        withDirCheck(Graph.pageRank(edges, "src", "dst", iters = 3,
-          checkpointDir = Some(dir)), 1),
-        withDirCheck(Graph.bfsHops(edges, "src", "dst", "a", maxHops = 10,
-          checkpointDir = Some(dir)), 1),
-        withDirCheck(Graph.kCoreBounded(kedges, "a", "b", k = 2, rounds = 3,
-          checkpointDir = Some(dir)), 1),
-        withDirCheck(Dedup.dupClusters(Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b"),
-          (1L to 5L).toDF("doc_id"), "doc_id", checkpointDir = Some(dir)), 1)
-      )
+      val relV = underConf(dir)(ops.map(op => withDirCheck(op(), 1)))
       localV.zip(relV).zipWithIndex.foreach { case ((l, r), i) =>
         assert(l == r, s"operator $i differs between local and reliable backends")
       }
       // reliable cuts write files, not block-manager entries
       assert((persistedIds -- base).isEmpty,
         "reliable mode must not leave persistent RDDs behind")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
+    } finally deleteDir(dir)
   }
 
   test("a failing operator releases every held checkpoint " +
@@ -173,57 +181,55 @@ class CkptLifecycleSpec extends AnyFunSuite {
       "failed bpeMergeTable must strand no checkpoints")
   }
 
-  test("per-call reliable dir does not hijack the application's own " +
-    "checkpoint dir (restored by close on success and failure paths)") {
-    val appDir = java.nio.file.Files.createTempDirectory("graft-app-ckpt-").toString
-    val opDir = java.nio.file.Files.createTempDirectory("graft-op-ckpt-").toString
+  test("reliable cuts under spark.graft.checkpointDir do not hijack the " +
+    "application's own checkpoint dir (each cut restores it exactly)") {
+    val appDir = tempDir("graft-app-ckpt-")
+    val opDir = tempDir("graft-op-ckpt-")
     try {
       spark.sparkContext.setCheckpointDir(appDir)
-      val pr = Graph.pageRank(edges, "src", "dst", iters = 2,
-        checkpointDir = Some(opDir))
-      pr.collect(); Ckpt.release(pr)
+      val pr = underConf(opDir)(Graph.pageRank(edges, "src", "dst", iters = 2))
+      pr.collect(); Ckpt.releaseResult(pr)
       // getCheckpointDir returns a URI (file:/...) of a UUID subdir —
       // containment of the app's root is the restore guarantee
       val after = spark.sparkContext.getCheckpointDir.get
       assert(after.contains(appDir),
         s"app checkpoint dir hijacked by operator call: $after")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(appDir))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(opDir))
-    }
+    } finally { deleteDir(appDir); deleteDir(opDir) }
   }
 
   test("reliable mode leaves NO checkpoint-dir residue when the app had " +
     "none (exact restore to None — the public API cannot unset)") {
     val sc = spark.sparkContext
-    val opDir = java.nio.file.Files.createTempDirectory("graft-op-ckpt2-").toString
+    val opDir = tempDir("graft-op-ckpt2-")
     val prior = org.apache.spark.graft.CheckpointDirAccess.get(sc)
     try {
       org.apache.spark.graft.CheckpointDirAccess.restore(sc, None)
-      val pr = Graph.pageRank(edges, "src", "dst", iters = 2,
-        checkpointDir = Some(opDir))
-      pr.collect(); Ckpt.release(pr)
+      val pr = underConf(opDir)(Graph.pageRank(edges, "src", "dst", iters = 2))
+      pr.collect(); Ckpt.releaseResult(pr)
       assert(sc.getCheckpointDir.isEmpty,
         "operator call must not leave its dir set on the context " +
           s"(found ${sc.getCheckpointDir})")
     } finally {
       org.apache.spark.graft.CheckpointDirAccess.restore(sc, prior)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(opDir))
+      deleteDir(opDir)
     }
   }
 
   test("two CONCURRENT reliable-mode chains with different dirs place " +
     "every cut in their own dir (per-cut lock, r13's documented race)") {
-    val dirA = java.nio.file.Files.createTempDirectory("graft-ckpt-a-").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft-ckpt-b-").toString
+    val dirA = tempDir("graft-ckpt-a-")
+    val dirB = tempDir("graft-ckpt-b-")
+    // two sessions of the one context, each with its own conf dir: the
+    // context's checkpoint dir is shared, the session confs are not
+    val (sa, sb) = (spark.newSession(), spark.newSession())
+    sa.conf.set("spark.graft.checkpointDir", dirA)
+    sb.conf.set("spark.graft.checkpointDir", dirB)
     try {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
-      val fa = Future(Graph.pageRank(edges, "src", "dst", iters = 4,
-        checkpointDir = Some(dirA)))
-      val fb = Future(Graph.kCoreBounded(kedges, "a", "b", k = 2, rounds = 4,
-        checkpointDir = Some(dirB)))
+      val fa = Future(Graph.pageRank(edgesIn(sa), "src", "dst", iters = 4))
+      val fb = Future(Graph.kCoreBounded(kedgesIn(sb), "a", "b", k = 2, rounds = 4))
       val (pa, pb) = (Await.result(fa, 120.seconds), Await.result(fb, 120.seconds))
       val (ra, rb) = (pa.collect().map(_.toSeq).toSet, pb.collect().map(_.toSeq).toSet)
       // each chain's result-backing cut must sit in ITS dir — under the
@@ -236,17 +242,14 @@ class CkptLifecycleSpec extends AnyFunSuite {
       val lb = Graph.kCoreBounded(kedges, "a", "b", k = 2, rounds = 4)
       assert(ra == la.collect().map(_.toSeq).toSet)
       assert(rb == lb.collect().map(_.toSeq).toSet)
-      Seq(pa, pb, la, lb).foreach(Ckpt.release)
+      Seq(pa, pb, la, lb).foreach(Ckpt.releaseResult)
       assert(rddDirCount(dirA) == 0 && rddDirCount(dirB) == 0)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dirA))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dirB))
-    }
+    } finally { deleteDir(dirA); deleteDir(dirB) }
   }
 
   test("releaseIssued prunes stopped-application residue and deletes " +
     "current-app reliable FILES for dropped results") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-sweep-").toString
+    val dir = tempDir("graft-ckpt-sweep-")
     try {
       // stopped-context residue: an entry under a foreign applicationId
       // can never be acted on (one live context per JVM) — one sweep
@@ -260,42 +263,35 @@ class CkptLifecycleSpec extends AnyFunSuite {
       // reliable files of a result the caller dropped without release:
       // the harness sweep deletes them deterministically (pre-r14 they
       // waited for the GC-timed ContextCleaner)
-      Graph.pageRank(edges, "src", "dst", iters = 2,
-        checkpointDir = Some(dir)).collect()
+      underConf(dir)(Graph.pageRank(edges, "src", "dst", iters = 2)).collect()
       assert(rddDirCount(dir) == 1)
       assert(Ckpt.releaseIssued(spark) >= 1)
       assert(rddDirCount(dir) == 0,
         "releaseIssued must delete current-app reliable checkpoint files")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
+    } finally deleteDir(dir)
   }
 
   test("Ckpt.cut (the non-iterative plan-flattening sites) honors the " +
     "conf posture: triangleCounts' two cuts land as reliable FILES " +
     "under spark.graft.checkpointDir, zero block-manager residue, " +
     "values identical to local mode") {
-    val confDir = java.nio.file.Files.createTempDirectory("graft-cut-conf-").toString
+    val confDir = tempDir("graft-cut-conf-")
     try {
       val localV = {
         val t = Graph.triangleCounts(kedges, "a", "b")
-        val r = t.collect().map(_.toSeq).toSet; Ckpt.release(t); r
+        val r = t.collect().map(_.toSeq).toSet; Ckpt.releaseResult(t); r
       }
-      spark.conf.set("spark.graft.checkpointDir", confDir)
       val base = persistedIds
-      val t = Graph.triangleCounts(kedges, "a", "b")
+      val t = underConf(confDir)(Graph.triangleCounts(kedges, "a", "b"))
       val rows = t.collect().map(_.toSeq).toSet
       assert(rows == localV, "conf-mode triangleCounts must match local")
       assert((persistedIds -- base).isEmpty,
         "conf-mode cuts must not persist block-manager RDDs")
       assert(rddDirCount(confDir) == 2,
         s"expected the 2 result-backing cuts as files, found ${rddDirCount(confDir)}")
-      Ckpt.release(t)
+      Ckpt.releaseResult(t)
       assert(rddDirCount(confDir) == 0)
-    } finally {
-      spark.conf.unset("spark.graft.checkpointDir")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(confDir))
-    }
+    } finally deleteDir(confDir)
   }
 
   test("the lineage-truncation log filter denies exactly the deliberate-" +
@@ -333,32 +329,32 @@ class CkptLifecycleSpec extends AnyFunSuite {
   }
 
   test("spark.graft.checkpointDir conf turns default-args calls reliable " +
-    "(the one-conf-line cluster posture); per-call arg still wins") {
-    val confDir = java.nio.file.Files.createTempDirectory("graft-ckpt-conf-").toString
-    val argDir = java.nio.file.Files.createTempDirectory("graft-ckpt-arg-").toString
+    "(the one-conf-line cluster posture) for its own session only") {
+    val confDir = tempDir("graft-ckpt-conf-")
     try {
-      spark.conf.set("spark.graft.checkpointDir", confDir)
       val base = persistedIds
-      // a packaged-query-shaped call: NO checkpointDir argument
-      val pr = Graph.pageRank(edges, "src", "dst", iters = 3)
-      pr.collect()
-      assert((persistedIds -- base).isEmpty,
-        "conf-selected reliable mode must not persist block-manager RDDs")
+      val other = spark.newSession()
+      val (pr, local) = underConf(confDir) {
+        // a packaged-query-shaped call: nothing but the conf selects
+        // the backend
+        val pr = Graph.pageRank(edges, "src", "dst", iters = 3)
+        pr.collect()
+        assert((persistedIds -- base).isEmpty,
+          "conf-selected reliable mode must not persist block-manager RDDs")
+        assert(rddDirCount(confDir) == 1,
+          "default-args call must checkpoint into the conf directory")
+        // the conf is session-scoped: a session without it stays local
+        val local = Graph.pageRank(edgesIn(other), "src", "dst", iters = 3)
+        local.collect()
+        (pr, local)
+      }
       assert(rddDirCount(confDir) == 1,
-        "default-args call must checkpoint into the conf directory")
-      // explicit argument overrides the conf
-      val pr2 = Graph.pageRank(edges, "src", "dst", iters = 3,
-        checkpointDir = Some(argDir))
-      pr2.collect()
-      assert(rddDirCount(argDir) == 1, "per-call dir must win over the conf")
-      assert(rddDirCount(confDir) == 1, "conf dir must not receive the arg call's cuts")
-      Ckpt.release(pr); Ckpt.release(pr2)
-      assert(rddDirCount(confDir) == 0 && rddDirCount(argDir) == 0)
-    } finally {
-      spark.conf.unset("spark.graft.checkpointDir")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(confDir))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(argDir))
-    }
+        "a session without the conf must not write into another's dir")
+      assert((persistedIds -- base).size == 1,
+        "the conf-less session's result must be a local block checkpoint")
+      Ckpt.releaseResult(pr); Ckpt.releaseResult(local)
+      assert(rddDirCount(confDir) == 0 && (persistedIds -- base).isEmpty)
+    } finally deleteDir(confDir)
   }
 
   /** EVERY filesystem entry under `root` (files and dirs, root itself
@@ -379,24 +375,21 @@ class CkptLifecycleSpec extends AnyFunSuite {
     "dir is COMPLETELY empty after release — iterative chain, conf-" +
     "posture Ckpt.cut, and the releaseIssued sweep all covered " +
     "(ADVICE r14: rdd-dir pins could not see empty-UUID-dir residue)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-empty-").toString
-    val confDir = java.nio.file.Files.createTempDirectory("graft-cut-empty-").toString
-    try {
-      // (1) per-call-arg iterative chain: its rounds all share one UUID
-      // subdir; releasing the result must take the subdir with it
-      val pr = Graph.pageRank(edges, "src", "dst", iters = 3,
-        checkpointDir = Some(dir))
+    val confDir = tempDir("graft-cut-empty-")
+    try underConf(confDir) {
+      // (1) iterative chain: its rounds all share one UUID subdir;
+      // releasing the result must take the subdir with it
+      val pr = Graph.pageRank(edges, "src", "dst", iters = 3)
       pr.collect()
-      assert(totalEntries(dir) > 0, "reliable run must have written files")
-      Ckpt.release(pr)
-      assert(totalEntries(dir) == 0,
-        s"release left ${totalEntries(dir)} entries (UUID-dir residue?) in $dir")
-      // (2) conf-posture Ckpt.cut sites: triangleCounts makes TWO cuts,
-      // each a throwaway one-cut chain with its own UUID subdir
-      spark.conf.set("spark.graft.checkpointDir", confDir)
+      assert(totalEntries(confDir) > 0, "reliable run must have written files")
+      Ckpt.releaseResult(pr)
+      assert(totalEntries(confDir) == 0,
+        s"release left ${totalEntries(confDir)} entries (UUID-dir residue?) in $confDir")
+      // (2) Ckpt.cut sites: triangleCounts makes TWO cuts, each a
+      // throwaway one-cut chain with its own UUID subdir
       val t = Graph.triangleCounts(kedges, "a", "b")
       t.collect()
-      Ckpt.release(t)
+      Ckpt.releaseResult(t)
       assert(totalEntries(confDir) == 0,
         s"Ckpt.cut release left ${totalEntries(confDir)} entries in $confDir")
       // (3) the harness sweep path: result dropped without release,
@@ -405,22 +398,18 @@ class CkptLifecycleSpec extends AnyFunSuite {
       assert(Ckpt.releaseIssued(spark) >= 1)
       assert(totalEntries(confDir) == 0,
         s"releaseIssued left ${totalEntries(confDir)} entries in $confDir")
-    } finally {
-      spark.conf.unset("spark.graft.checkpointDir")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(confDir))
-    }
+    } finally deleteDir(confDir)
   }
 
-  // ---- round 17: counted cuts (VERDICT r16 #6) ----
+  // ---- counted cuts and jobs per cut ----
 
   test("cutCounted returns the cut relation AND its row count from the " +
-    "materializing job, on all three backends") {
-    import graft.operators.CkptChain
+    "materializing job, on both backends") {
     val df = (1L to 257L).toDF("v").repartition(7)
     val expect = (1L to 257L).map(Seq(_)).toSet
 
-    def check(ch: CkptChain): Unit = {
+    def check(): Unit = {
+      val ch = new CkptChain(spark)
       val (cut, n) = ch.cutCounted("s")(df)
       assert(n == 257L, s"materializing count must equal the row count, got $n")
       assert(cut.collect().map(_.toSeq).toSet == expect,
@@ -428,17 +417,53 @@ class CkptLifecycleSpec extends AnyFunSuite {
       ch.close()
     }
 
-    // local DISK_ONLY (default)
-    check(new CkptChain(spark, None))
-    // local MEMORY_AND_DISK (memdisk opt-in)
-    spark.conf.set("spark.graft.graph.checkpointStorage", "memdisk")
-    try check(new CkptChain(spark, None))
-    finally spark.conf.unset("spark.graft.graph.checkpointStorage")
-    // reliable checkpoint-dir backend
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-").toString
-    try check(new CkptChain(spark, Some(dir)))
-    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    check() // local DISK_ONLY (default)
+    val dir = tempDir("graft-cc-")
+    try underConf(dir)(check()) // reliable
+    finally deleteDir(dir)
     assert(Ckpt.releaseIssued(spark) == 0,
       "close() must have released every counted cut")
+  }
+
+  test("one Spark job per cut: Ckpt.cut and CkptChain.cutCounted, on the " +
+    "local backend and under spark.graft.checkpointDir") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .toSeq.flatMap(_.split(",")).filter(_.startsWith("graft-ckpt-jobs-"))
+          .foreach(t => jobs.merge(t, 1, (a, b) => a + b))
+    }
+    // a shuffle-free plan: the cut's own materializing job is the only
+    // job it can run; a fresh DataFrame per cut so no stage is reused
+    def input = spark.range(0, 1000, 1, 4).selectExpr("id", "id * 2 AS v")
+    def tagged(tag: String)(f: => Unit): Unit = {
+      sc.addJobTag(s"graft-ckpt-jobs-$tag")
+      try f finally sc.removeJobTag(s"graft-ckpt-jobs-$tag")
+    }
+    def cutBoth(backend: String): Unit = {
+      tagged(s"$backend-cut")(Ckpt.releaseResult(Ckpt.cut(input)))
+      tagged(s"$backend-counted") {
+        val ch = new CkptChain(spark)
+        assert(ch.cutCounted("s")(input)._2 == 1000L)
+        ch.close()
+      }
+    }
+    sc.addSparkListener(listener)
+    val dir = tempDir("graft-ckpt-jobs-")
+    try {
+      cutBoth("local")
+      underConf(dir)(cutBoth("reliable"))
+      assert(org.apache.spark.graft.ListenerBusAccess.waitUntilEmpty(sc, 30000L))
+    } finally { sc.removeSparkListener(listener); deleteDir(dir) }
+    import scala.jdk.CollectionConverters._
+    val got = jobs.asScala.map { case (k, v) =>
+      k.stripPrefix("graft-ckpt-jobs-") -> v.intValue }.toMap
+    // a reliable counted cut ran count() and then a second file-writing
+    // job before the count moved into the materializing job
+    val expect = Map("local-cut" -> 1, "local-counted" -> 1,
+      "reliable-cut" -> 1, "reliable-counted" -> 1)
+    assert(got == expect, s"jobs per cut: $got")
   }
 }

@@ -190,10 +190,12 @@ class DedupSpec extends AnyFunSuite {
     try {
       val local = Dedup.dupClusters(pairs, nodes, "id")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val reliable = Dedup.dupClusters(pairs, nodes, "id", Some(dir))
+      spark.conf.set("spark.graft.checkpointDir", dir)
+      val reliable = Dedup.dupClusters(pairs, nodes, "id")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(reliable == local)
     } finally {
+      spark.conf.unset("spark.graft.checkpointDir")
       import scala.reflect.io.Directory
       new Directory(new java.io.File(dir)).deleteRecursively()
     }

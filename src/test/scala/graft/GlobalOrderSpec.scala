@@ -7,7 +7,7 @@ import graft.operators.GlobalOrder
 
 /** Round-17 pins for the two-phase global ordering (VERDICT r16 #4):
   * [[GlobalOrder]] must be VALUE-IDENTICAL to the naive
-  * single-partition `Window.orderBy` it replaces in c83/c74/c53 —
+  * single-partition `Window.orderBy` it replaces in c83/c45 —
   * including when the range layout genuinely splits the relation
   * across several partitions, so the partition-boundary offsets are
   * exercised, not just the degenerate one-partition case. */
@@ -58,7 +58,7 @@ class GlobalOrderSpec extends AnyFunSuite {
       val w = Window.orderBy(order: _*)
       val naiveRank = freqs.withColumn("r", row_number().over(w))
         .collect().map(r => (r.getString(0), r.getInt(2))).toSet
-      val rank = GlobalOrder.withRowNumber(freqs, order, "r")
+      val rank = GlobalOrder.withRankAndRunningSum(freqs, order, Some("r"), None)
         .select("token", "r")
         .collect().map(r => (r.getString(0), r.getInt(1))).toSet
       assert(rank == naiveRank)
@@ -75,13 +75,39 @@ class GlobalOrderSpec extends AnyFunSuite {
 
   test("empty input yields empty output") {
     val empty = freqs.filter(col("_f") < 0)
-    assert(GlobalOrder.withRowNumber(empty, Seq(col("_f").desc), "r").count() == 0)
+    assert(GlobalOrder.withRankAndRunningSum(empty, Seq(col("_f").desc),
+      Some("r"), None).count() == 0)
     graft.operators.Ckpt.releaseIssued(spark)
   }
 
   test("output rank column stays IntegerType (schema parity with row_number)") {
-    val out = GlobalOrder.withRowNumber(freqs, Seq(col("_f").desc, col("token").asc), "r")
+    val out = GlobalOrder.withRankAndRunningSum(freqs,
+      Seq(col("_f").desc, col("token").asc), Some("r"), None)
     assert(out.schema("r").dataType == org.apache.spark.sql.types.IntegerType)
     graft.operators.Ckpt.releaseIssued(spark)
+  }
+
+  test("rank past Int.MaxValue rows throws at the driver instead of wrapping") {
+    // fake boundary counts: three partitions totalling 2^31 rows
+    val big = Seq((0, 1L << 30, 0L), (1, (1L << 30) - 1, 0L), (2, 1L, 0L))
+    val e = intercept[ArithmeticException](GlobalOrder.offsets(big, rank = true))
+    assert(e.getMessage.contains("2147483648"))
+    // one row fewer fits, and the offsets are the preceding totals
+    val fits = big.init :+ ((2, 0L, 5L))
+    assert(GlobalOrder.offsets(fits, rank = true) ==
+      Seq((0, 0L, 0L), (1, 1L << 30, 0L), (2, Int.MaxValue.toLong, 0L)))
+    // a cumsum-only call has no IntegerType column to wrap
+    assert(GlobalOrder.offsets(big, rank = false).last._2 == Int.MaxValue.toLong)
+  }
+
+  test("a null in the running-sum column fails loudly and holds no checkpoint") {
+    val withNull = freqs.withColumn("_f",
+      when(col("token") === "tok0250", lit(null)).otherwise(col("_f")))
+    val before = graft.operators.Ckpt.issuedCount
+    val e = intercept[IllegalArgumentException](GlobalOrder.withRunningSum(
+      withNull, Seq(col("_f").desc, col("token").asc), "_f", "c"))
+    assert(e.getMessage.contains("1 null"))
+    assert(graft.operators.Ckpt.issuedCount == before,
+      "the staged cut must be released when the check throws")
   }
 }

@@ -177,29 +177,46 @@ class GraphSpec extends AnyFunSuite {
     assert(Graph.kCoreBounded(edges, "a", "b", k = 4, rounds = 5).count() == 0)
   }
 
-  test("checkpoint backends are value-identical: default DISK_ONLY vs " +
-    "memdisk opt-out vs reliable checkpointDir") {
-    // round 12 (disk/memdisk): the ckpt hook only moves WHERE checkpoint
-    // blocks live; round 13 (reliable dir): or whether rounds persist to
-    // durable storage instead. Results must not depend on any of it.
+  test("checkpoint backends are value-identical: default local DISK_ONLY " +
+    "vs reliable spark.graft.checkpointDir") {
+    // the backend only moves WHERE cuts live (executor blocks or durable
+    // files); results must not depend on it
     val kedges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
       (3L, 4L), (4L, 5L), (5L, 6L)).toDF("a", "b")
-    val key = "spark.graft.graph.checkpointStorage"
-    def all(ck: Option[String]): Seq[Set[Seq[Any]]] = Seq(
-      Graph.bfsHops(edges, "src", "dst", "a", maxHops = 10, checkpointDir = ck),
-      Graph.pageRank(edges, "src", "dst", iters = 3, checkpointDir = ck),
-      Graph.triangleCounts(kedges, "a", "b"), // non-iterative: local only
-      Graph.kCoreBounded(kedges, "a", "b", k = 2, rounds = 3, checkpointDir = ck)
-    ).map(_.collect().map(_.toSeq).toSet)
-    val disk = all(None) // default
-    spark.conf.set(key, "memdisk")
-    val mem = try all(None) finally spark.conf.unset(key)
-    val dir = java.nio.file.Files.createTempDirectory("graft-graph-ckpt-").toString
-    val rel = try all(Some(dir))
-      finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    for ((arms, i) <- disk.zip(mem).zip(rel).map { case ((a, b), c) => Seq(a, b, c) }.zipWithIndex) {
-      assert(arms.distinct.size == 1,
-        s"operator $i differs across checkpoint backends")
+    def all(): Seq[Set[Seq[Any]]] = Seq(
+      Graph.bfsHops(edges, "src", "dst", "a", maxHops = 10),
+      Graph.pageRank(edges, "src", "dst", iters = 3),
+      Graph.triangleCounts(kedges, "a", "b"),
+      Graph.kCoreBounded(kedges, "a", "b", k = 2, rounds = 3)
+    ).map { df =>
+      val rows = df.collect().map(_.toSeq).toSet
+      graft.operators.Ckpt.releaseResult(df)
+      rows
     }
+    val local = all()
+    val dir = java.nio.file.Files.createTempDirectory("graft-graph-ckpt-").toString
+    spark.conf.set("spark.graft.checkpointDir", dir)
+    val rel = try all() finally {
+      spark.conf.unset("spark.graft.checkpointDir")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+    for (((l, r), i) <- local.zip(rel).zipWithIndex)
+      assert(l == r, s"operator $i differs across checkpoint backends")
+  }
+
+  test("coOccurrencePairs: null entity ids pair with nothing, in the " +
+    "uncapped join tier and the capped exec tier alike") {
+    // item 10 is shared by 3 real entities and a null one: with the cap
+    // at 3 the null must not push the bucket over it; item 20 pairs a
+    // null with entity 1 only
+    val rel = Seq[(java.lang.Long, Long)]((1L, 10L), (2L, 10L), (3L, 10L),
+      (null, 10L), (1L, 20L), (null, 20L), (2L, 30L), (3L, 30L))
+      .toDF("e", "i")
+    def pairs(cap: Long) = Graph.coOccurrencePairs(rel, "e", "i",
+        minShared = 1, maxItemDeg = cap)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val expect = Set((1L, 2L, 1L), (1L, 3L, 1L), (2L, 3L, 2L))
+    assert(pairs(0L) == expect, "uncapped (join) tier")
+    assert(pairs(3L) == expect, "capped (exec) tier")
   }
 }

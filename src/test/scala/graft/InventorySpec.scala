@@ -90,6 +90,30 @@ class InventorySpec extends AnyFunSuite {
         s"declared but missing: ${(declared -- mains).toSeq.sorted.mkString(", ")}")
   }
 
+  test("settable knobs are exactly the declared conf keys and env vars") {
+    // every `spark.graft.*` conf key and environment variable the
+    // library reads is a knob users can set: a new one must be added
+    // here deliberately, with a reason to exist
+    import scala.jdk.CollectionConverters._
+    val confKey = "\"(spark\\.graft\\.[\\w.]+)\"".r
+    val envRead = "(?:sys\\.env|System\\.getenv)[.\\w]*\\(\\s*\"(\\w+)\"".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val knobs = try files.iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        (confKey.findAllMatchIn(src) ++ envRead.findAllMatchIn(src)).map(_.group(1))
+      }.toSet
+      finally files.close()
+    val declared = Set("spark.graft.checkpointDir",
+      "SPARK_GRAFT_CPUS", "SPARK_GRAFT_CHECKPOINT_DIR", "SPARK_GRAFT_SF_DIR",
+      "SPARK_GRAFT_QUERY_FILTER", "SPARK_GRAFT_DECADE_DIR",
+      "SPARK_GRAFT_SCALE_DECADE", "GRAFT_HARNESS_CKPT_BASE")
+    assert(knobs == declared,
+      s"undeclared knobs: ${(knobs -- declared).toSeq.sorted.mkString(", ")}; " +
+        s"declared but unread: ${(declared -- knobs).toSeq.sorted.mkString(", ")}")
+  }
+
   test("query names follow the driver's naming contract") {
     // one stable prefix family per tier: aN (ETL parity), qN (SQL
     // surface), sN (streaming), cN (LLM-pipeline), mN (multimodal),
