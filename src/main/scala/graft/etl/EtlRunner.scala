@@ -30,6 +30,9 @@ class EtlRunner(spark: SparkSession) {
   // concurrent actions on the session must not pollute the count.
   private val myGroup = s"graft-etl-${System.nanoTime()}"
   private val myStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+  // the thread-local properties `setJobGroup` writes (a null restores unset)
+  private val jobGroupProps =
+    Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
   private val listener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       val group = Option(e.properties)
@@ -95,8 +98,12 @@ class EtlRunner(spark: SparkSession) {
     }
     written.reset()
     myStages.clear()
-    spark.sparkContext.setJobGroup(myGroup, s"etl:${job.name}")
-    spark.sparkContext.addSparkListener(listener)
+    // the job runs under this runner's group (the stage filter above,
+    // and traced runs, key on it); the caller's own group comes back after
+    val sc = spark.sparkContext
+    val callerGroup = jobGroupProps.map(k => k -> sc.getLocalProperty(k))
+    sc.setJobGroup(myGroup, s"etl:${job.name}")
+    sc.addSparkListener(listener)
     val (sent, rowsWritten) =
       try {
         val writer = observed.write
@@ -130,8 +137,8 @@ class EtlRunner(spark: SparkSession) {
         // task is counted once (EtlSpec's retried-write case).
         (sent, if (isJdbc) sent else written.sum())
       } finally {
-        spark.sparkContext.clearJobGroup()
-        spark.sparkContext.removeSparkListener(listener)
+        callerGroup.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+        sc.removeSparkListener(listener)
       }
 
     JobResult(job.name, sent, rowsWritten, (System.nanoTime() - t0) / 1e9)

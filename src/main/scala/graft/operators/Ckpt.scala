@@ -256,6 +256,19 @@ object Ckpt {
 
   /** Number of graft-issued checkpoints not yet released (diagnostic). */
   def issuedCount: Int = issued.size()
+
+  /** Create `<base>/<prefix><uuid>` through `base`'s Hadoop FileSystem
+    * (parents included) and return its fully qualified path — the one
+    * way graft mints a checkpoint directory: a chain's subdir and a
+    * streaming harness run's dir alike. */
+  private[graft] def mintDir(base: String, prefix: String,
+                             hadoopConf: org.apache.hadoop.conf.Configuration): String = {
+    val path = new org.apache.hadoop.fs.Path(base,
+      prefix + java.util.UUID.randomUUID().toString)
+    val fs = path.getFileSystem(hadoopConf)
+    fs.mkdirs(path)
+    fs.getFileStatus(path).getPath.toString
+  }
 }
 
 /** One operator call's chain of per-round checkpoints.
@@ -302,11 +315,7 @@ private[graft] final class CkptChain(spark: SparkSession) {
         // the result back — an app thread racing its own
         // setCheckpointDir between our set and our read could otherwise
         // be adopted as this chain's directory
-        val path = new org.apache.hadoop.fs.Path(d,
-          java.util.UUID.randomUUID().toString)
-        val fs = path.getFileSystem(sc.hadoopConfiguration)
-        fs.mkdirs(path)
-        val s = fs.getFileStatus(path).getPath.toString
+        val s = Ckpt.mintDir(d, "", sc.hadoopConfiguration)
         ourSub = Some(s)
         s
       }

@@ -52,9 +52,11 @@ object LayerC {
 
     // exact n-gram Jaccard near-dup join — SQL-expressible, so it
     // doubles as the recall oracle for c2/c3. The plain inverted index
-    // wins at this corpus size (≤5k docs: 2.6 s vs 6.0 s); the
-    // prefix-filtered variant (identical output) takes over on large or
-    // dup-heavy corpora (50k docs: 76 s vs 218 s) — see PLANS.md.
+    // wins at this corpus size (≤5k docs: 2.6 s vs 6.0 s). The
+    // prefix-filtered `ngramJaccardPairsPrefix` (identical output) is
+    // the alternative a caller chooses for large or dup-heavy corpora;
+    // nothing here switches to it — the crossover (50k docs: 76 s vs
+    // 218 s) is in PLANS.md.
     "c4_ngram_jaccard" -> { (s, dir) =>
       Dedup.ngramJaccardPairs(docs(s, dir), "doc_id", "text",
           shingleN = 3, threshold = 0.5)

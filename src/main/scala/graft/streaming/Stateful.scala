@@ -125,40 +125,18 @@ object Stateful {
 
   /** Run the transformWithState query to completion into a memory sink.
     * `transformWithState` only runs on the RocksDB state store provider
-    * (its state layout needs multiple column families); the conf is
-    * scoped to this run and restored after. */
+    * (its state layout needs multiple column families); the harness
+    * scopes that conf to this run. */
   def runTwsToCompletion(spark: SparkSession, dir: String, name: String): DataFrame =
-    Streams.withHarnessPartitions(spark) {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        spark.catalog.dropTempView(name)
-        Streams.runHarnessQuery(spark, name) { ckpt =>
-          runningTotalsTws(spark, Streams.eventStream(spark, dir))
-            .writeStream.format("memory").queryName(name)
-            .option("checkpointLocation", ckpt).outputMode("append").start()
-        }
-        spark.table(name)
-      } finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
+    Streams.runToMemorySink(spark,
+      runningTotalsTws(spark, Streams.eventStream(spark, dir)).toDF(), name, "append",
+      Map("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
 
-  /** Run the stateful query to completion into a memory sink (with the
-    * harness partition count — see Streams.withHarnessPartitions). */
+  /** Run the stateful query to completion into a memory sink. */
   def runToCompletion(spark: SparkSession, dir: String, name: String): DataFrame =
-    Streams.withHarnessPartitions(spark) {
-      spark.catalog.dropTempView(name)
-      Streams.runHarnessQuery(spark, name) { ckpt =>
-        runningTotals(spark, Streams.eventStream(spark, dir))
-          .writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", ckpt).outputMode("append").start()
-      }
-      spark.table(name)
-    }
+    Streams.runToMemorySink(spark,
+      runningTotals(spark, Streams.eventStream(spark, dir)).toDF(), name, "append")
 
   /** foreachBatch sink: reuse an arbitrary batch writer per micro-batch —
     * the streaming face of the ETL write path (micro-batch id gives

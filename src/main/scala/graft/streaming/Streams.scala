@@ -427,38 +427,44 @@ object Streams {
       .toDF()
   }
 
-  /** Replayed verification runs execute several tiny micro-batches into
-    * a memory sink; their wall time is per-batch HARNESS overhead, not
-    * plan cost, and it scales with the shuffle partition count (each
-    * stateful operator keeps one state-store instance per partition per
-    * batch — a stream-stream join keeps four). Results are
-    * partition-count independent, so the harness plans its micro-batches
-    * over a few partitions instead of the session's 32; a production
-    * stream sizes this to its executor count instead. The session conf
-    * is restored afterwards — batch queries are untouched. */
-  private[streaming] def withHarnessPartitions[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    // overridable for profiling and for harness runs whose single
-    // micro-batch does real aggregation work (see PLANS.md on s1)
-    val n = spark.conf.getOption("graft.streaming.harnessPartitions").getOrElse("4")
-    spark.conf.set(key, n)
-    try f finally spark.conf.set(key, prev)
+  /** Session confs every harness run plans under. Replayed verification
+    * runs execute several tiny micro-batches into their sink; their wall
+    * time is per-batch HARNESS overhead, not plan cost, and it scales
+    * with the shuffle partition count (each stateful operator keeps one
+    * state-store instance per partition per batch — a stream-stream join
+    * keeps four). Results are partition-count independent, so the
+    * harness plans its micro-batches over 4 partitions instead of the
+    * session's 32; a production stream sizes this to its executor count
+    * instead. */
+  private val harnessConf = Map("spark.sql.shuffle.partitions" -> "4")
+
+  /** Run `f` with `conf` set on the session, then put back the exact
+    * prior state — a key that was not set is unset again — also when
+    * `f` throws. Batch queries outside the scope are untouched. */
+  private def withConf[T](spark: SparkSession, conf: Map[String, String])(f: => T): T = {
+    val prior = conf.keys.map(k => k -> spark.conf.getAll.get(k))
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
   }
 
-  /** Fresh checkpoint dir for ONE harness replay run. Base resolution
-    * (round 15, VERDICT r14 #2 — explicit override > conf > tmpfs/temp):
+  /** Fresh checkpoint dir for ONE harness replay run, minted by
+    * [[graft.operators.Ckpt.mintDir]] under:
     *
-    *   1. `GRAFT_HARNESS_CKPT_BASE` env — the explicit override
-    *      (probing; hosts whose tmpfs is too small for replay state);
-    *   2. `spark.graft.checkpointDir` session conf — the same ONE CONF
-    *      LINE that turns every batch-side graft checkpoint durable
-    *      extends to the streaming entry points: with it set, offset/
-    *      commit WALs and state stores land under the durable dir, the
-    *      posture a production deployment wants (its streams additionally
-    *      pass their own long-lived `checkpointLocation`s; the conf
-    *      covers the packaged replay-harness paths);
-    *   3. tmpfs (/dev/shm) when present, else java.io.tmpdir — the
+    *   1. the `spark.graft.checkpointDir` session conf when set — the
+    *      same ONE CONF LINE that turns every batch-side graft
+    *      checkpoint durable extends to the streaming entry points:
+    *      offset/commit WALs and state stores land under the durable
+    *      dir, the posture a production deployment wants (its streams
+    *      additionally pass their own long-lived `checkpointLocation`s;
+    *      the conf covers the packaged replay-harness paths). A
+    *      URI-schemed value (`hdfs://nn/ckpt`, `s3a://bucket/ckpt`)
+    *      resolves through Hadoop Path/FileSystem exactly as on the
+    *      batch side;
+    *   2. else tmpfs (/dev/shm) when present, else java.io.tmpdir — the
     *      bench-right default (round 13): the replay harness is not
     *      measuring WAL durability, and host-disk fsync stalls land in
     *      the measured streaming wall (the r13 inflated artifact shows
@@ -466,82 +472,59 @@ object Streams {
     *
     * Unique dir per RUN in every mode (a fixed root would make rep 2
     * RESUME the finished rep-1 checkpoint instead of replaying);
-    * deleted by the caller after stop — a COMPLETED replay's checkpoint
-    * is transient state in any posture.
-    *
-    * URI-schemed base values (`hdfs://nn/ckpt`, `s3a://bucket/ckpt`)
-    * resolve through Hadoop Path/FileSystem, exactly like the batch
-    * side's CkptChain resolves the SAME conf key (ADVICE r15:
-    * java.nio.Paths would silently turn them into a relative LOCAL
-    * dir, defeating the one-conf-line durable posture on a cluster).
-    * Scheme-less values are local paths by definition and keep the
-    * java.nio fast path. */
+    * [[runHarnessQuery]] deletes it after stop — a COMPLETED replay's
+    * checkpoint is transient state in any posture. */
   private[graft] def harnessCheckpointDir(spark: SparkSession, name: String): String = {
-    val base = sys.env.get("GRAFT_HARNESS_CKPT_BASE")
-      .orElse(spark.conf.getOption("spark.graft.checkpointDir"))
-    val scheme = base.flatMap(b =>
-      Option(new org.apache.hadoop.fs.Path(b).toUri.getScheme))
-    if (base.isDefined && scheme.exists(_ != "file")) {
-      val p = new org.apache.hadoop.fs.Path(base.get,
-        s"graft-ckpt-$name-" + java.util.UUID.randomUUID().toString)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.mkdirs(p)
-      fs.getFileStatus(p).getPath.toString
-    } else {
-      val root = base
-        .map(b => java.nio.file.Paths.get(
-          // a file:-schemed value still resolves to its local path
-          if (scheme.isDefined) new org.apache.hadoop.fs.Path(b).toUri.getPath
-          else b))
-        .getOrElse {
-          val shm = new java.io.File("/dev/shm")
-          if (shm.isDirectory && shm.canWrite) shm.toPath
-          else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-        }
-      java.nio.file.Files.createDirectories(root)
-      java.nio.file.Files.createTempDirectory(root, s"graft-ckpt-$name-").toString
+    val base = spark.conf.getOption("spark.graft.checkpointDir").getOrElse {
+      val shm = new java.io.File("/dev/shm")
+      if (shm.isDirectory && shm.canWrite) shm.getPath
+      else System.getProperty("java.io.tmpdir")
     }
+    graft.operators.Ckpt.mintDir(base, s"graft-ckpt-$name-",
+      spark.sparkContext.hadoopConfiguration)
   }
 
-  /** Start a harness streaming query with a fresh [[harnessCheckpointDir]],
-    * drain it, stop it, and remove the checkpoint (scheme-aware: a
-    * Hadoop-minted dir is deleted through its own FileSystem). */
-  private[graft] def runHarnessQuery(spark: SparkSession, name: String)(
-      start: String => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val ckpt = harnessCheckpointDir(spark, name)
-    try {
-      val q = start(ckpt)
-      try q.processAllAvailable() finally q.stop()
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(ckpt)
-      if (Option(p.toUri.getScheme).exists(_ != "file"))
-        try { p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(p, true); () }
-        catch { case t: Throwable =>
-          // best-effort cleanup stays best-effort, but a leaked DURABLE
-          // checkpoint dir must leave a trace (ADVICE r16) — unlike the
-          // local path, nothing else will ever reclaim it
-          System.err.println(
-            s"[streams] failed to delete checkpoint $ckpt: $t")
+  /** The one harness stream runner: under [[harnessConf]] plus `conf`,
+    * start a query on a fresh [[harnessCheckpointDir]], drain it, stop
+    * it, delete the checkpoint dir (never its base) and restore the
+    * session conf. A failed delete logs the leaked path — nothing else
+    * will ever reclaim a durable one. */
+  private[graft] def runHarnessQuery(spark: SparkSession, name: String,
+                                     conf: Map[String, String] = Map.empty)(
+      start: String => org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    withConf(spark, harnessConf ++ conf) {
+      val ckpt = harnessCheckpointDir(spark, name)
+      try {
+        val q = start(ckpt)
+        try q.processAllAvailable() finally q.stop()
+      } finally {
+        val p = new org.apache.hadoop.fs.Path(ckpt)
+        try {
+          if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true))
+            throw new java.io.IOException("delete returned false")
+        } catch { case scala.util.control.NonFatal(t) =>
+          System.err.println(s"[streams] failed to delete checkpoint $ckpt: $t")
         }
-      else graft.Tables.deleteRecursively(ckpt)
-    }
-  }
-
-  private def runToMemorySink(spark: SparkSession, streamingDf: DataFrame,
-                              name: String, outputMode: String): DataFrame =
-    withHarnessPartitions(spark) {
-      spark.catalog.dropTempView(name)
-      runHarnessQuery(spark, name) { ckpt =>
-        streamingDf.writeStream
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", ckpt)
-          .outputMode(outputMode)
-          .start()
       }
-      spark.table(name)
     }
+
+  /** Run `streamingDf` to completion into a memory sink named `name` and
+    * return the sink as a batch DataFrame. `streamingDf` is built inside
+    * the harness conf scope. */
+  private[streaming] def runToMemorySink(spark: SparkSession, streamingDf: => DataFrame,
+                                         name: String, outputMode: String,
+                                         conf: Map[String, String] = Map.empty): DataFrame = {
+    spark.catalog.dropTempView(name)
+    runHarnessQuery(spark, name, conf) { ckpt =>
+      streamingDf.writeStream
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", ckpt)
+        .outputMode(outputMode)
+        .start()
+    }
+    spark.table(name)
+  }
 
   /** Run an append-mode streaming query (stream-stream joins support
     * only append) to completion into a memory sink. */
@@ -580,37 +563,36 @@ object Streams {
     * than living forever. */
   def cdcApply(spark: SparkSession, changes: DataFrame, keyCol: String,
                tsCol: String, tieCol: String, opCol: String,
-               valueCol: String, workDir: String): DataFrame =
-    withHarnessPartitions(spark) {
-      import org.apache.spark.sql.expressions.Window
-      val cols = Seq(keyCol, opCol, valueCol, tsCol, tieCol).map(col)
-      val byLatest = Window.partitionBy(keyCol)
-        .orderBy(col(tsCol).desc, col(tieCol).desc)
-      val latestDir = new java.util.concurrent.atomic.AtomicReference[String](null)
-      runHarnessQuery(spark, "cdc_apply") { ckpt =>
-        changes.writeStream
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val latest = batch.select(cols: _*)
-              .withColumn("_rk", row_number().over(byLatest))
-              .filter(col("_rk") === 1).drop("_rk")
-            val merged = Option(latestDir.get()) match {
-              case None    => latest
-              case Some(d) =>
-                spark.read.parquet(d).unionByName(latest)
-                  .withColumn("_rk", row_number().over(byLatest))
-                  .filter(col("_rk") === 1).drop("_rk")
-            }
-            merged.write.mode("overwrite").parquet(s"$workDir/state_$id")
-            latestDir.set(s"$workDir/state_$id")
+               valueCol: String, workDir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val cols = Seq(keyCol, opCol, valueCol, tsCol, tieCol).map(col)
+    val byLatest = Window.partitionBy(keyCol)
+      .orderBy(col(tsCol).desc, col(tieCol).desc)
+    val latestDir = new java.util.concurrent.atomic.AtomicReference[String](null)
+    runHarnessQuery(spark, "cdc_apply") { ckpt =>
+      changes.writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          val latest = batch.select(cols: _*)
+            .withColumn("_rk", row_number().over(byLatest))
+            .filter(col("_rk") === 1).drop("_rk")
+          val merged = Option(latestDir.get()) match {
+            case None    => latest
+            case Some(d) =>
+              spark.read.parquet(d).unionByName(latest)
+                .withColumn("_rk", row_number().over(byLatest))
+                .filter(col("_rk") === 1).drop("_rk")
           }
-          .start()
-      }
-      // at least one micro-batch always runs on a non-empty replay
-      spark.read.parquet(latestDir.get())
-        .filter(col(opCol) =!= "delete")
-        .select(col(keyCol), col(valueCol), col(tsCol))
+          merged.write.mode("overwrite").parquet(s"$workDir/state_$id")
+          latestDir.set(s"$workDir/state_$id")
+        }
+        .start()
     }
+    // at least one micro-batch always runs on a non-empty replay
+    spark.read.parquet(latestDir.get())
+      .filter(col(opCol) =!= "delete")
+      .select(col(keyCol), col(valueCol), col(tsCol))
+  }
 
   /** Run a streaming aggregation to completion into a memory sink and
     * return the final result as a batch DataFrame. `complete` output

@@ -169,6 +169,25 @@ class EtlSpec extends AnyFunSuite {
     assert(readBack.columns.forall(c => c == c.toUpperCase))
   }
 
+  test("runJob keeps the caller's job group and still counts its own stages") {
+    val work = Files.createTempDirectory("graft_etl_group").toString
+    spark.range(0, 3000, 1, 3).toDF("id").createOrReplaceTempView("group_src")
+    val job = EtlJob(name = "grouped", extract = "SELECT id FROM group_src",
+      write = "grouped", mode = "overwrite")
+    val sc = spark.sparkContext
+    val props = Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    sc.setJobGroup("caller-group", "caller's work", interruptOnCancel = true)
+    try {
+      val r = new EtlRunner(spark).runJob(job, work)
+      // rows written are counted from the stages of the runner's own group
+      assert(r.rowsSent == 3000 && r.rowsWritten == 3000)
+      assert(props.map(sc.getLocalProperty) == Seq("caller-group", "caller's work", "true"))
+    } finally sc.clearJobGroup()
+    // a caller with no group gets none back
+    new EtlRunner(spark).runJob(job, work)
+    assert(props.map(sc.getLocalProperty).forall(_ == null))
+  }
+
   test("retried write: a task that fails mid-write is counted once") {
     // the shared session runs local[4, 3]: partition 0's first attempt
     // dies after 500 rows reached the writer, the retry succeeds

@@ -91,24 +91,32 @@ class InventorySpec extends AnyFunSuite {
   }
 
   test("settable knobs are exactly the declared conf keys and env vars") {
-    // every `spark.graft.*` conf key and environment variable the
-    // library reads is a knob users can set: a new one must be added
-    // here deliberately, with a reason to exist
+    // every conf key and environment variable the library reads is a
+    // knob users can set: a new one must be added here deliberately,
+    // with a reason to exist. Conf keys are every `spark.graft.*`
+    // literal plus every literal key read through `conf.get`/`getOption`
+    // that Spark's SQLConf does not define — a knob outside the
+    // `spark.graft` namespace is still a knob.
     import scala.jdk.CollectionConverters._
-    val confKey = "\"(spark\\.graft\\.[\\w.]+)\"".r
+    val graftKey = "\"(spark\\.graft\\.[\\w.]+)\"".r
+    val confRead = "(?i)conf\\.get(?:Option)?\\(\\s*\"([\\w.]+)\"".r
     val envRead = "(?:sys\\.env|System\\.getenv)[.\\w]*\\(\\s*\"(\\w+)\"".r
+    val sqlConf = new org.apache.spark.sql.internal.SQLConf
+    def stockSpark(k: String) = sqlConf.isModifiable(k) ||
+      org.apache.spark.sql.internal.SQLConf.isStaticConfigKey(k)
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
     val knobs = try files.iterator.asScala
       .filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
         val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        (confKey.findAllMatchIn(src) ++ envRead.findAllMatchIn(src)).map(_.group(1))
+        (graftKey.findAllMatchIn(src) ++ envRead.findAllMatchIn(src)).map(_.group(1)) ++
+          confRead.findAllMatchIn(src).map(_.group(1)).filterNot(stockSpark)
       }.toSet
       finally files.close()
     val declared = Set("spark.graft.checkpointDir",
       "SPARK_GRAFT_CPUS", "SPARK_GRAFT_CHECKPOINT_DIR", "SPARK_GRAFT_SF_DIR",
       "SPARK_GRAFT_QUERY_FILTER", "SPARK_GRAFT_DECADE_DIR",
-      "SPARK_GRAFT_SCALE_DECADE", "GRAFT_HARNESS_CKPT_BASE")
+      "SPARK_GRAFT_SCALE_DECADE")
     assert(knobs == declared,
       s"undeclared knobs: ${(knobs -- declared).toSeq.sorted.mkString(", ")}; " +
         s"declared but unread: ${(declared -- knobs).toSeq.sorted.mkString(", ")}")

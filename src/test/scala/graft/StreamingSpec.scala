@@ -278,6 +278,54 @@ class StreamingSpec extends AnyFunSuite {
       .forall(!_.contains("RocksDB")))
   }
 
+  test("harness runs leave shuffle partitions and the state-store provider " +
+    "exactly as found: preset, absent, and when the stream throws mid-run") {
+    import graft.streaming.Stateful
+    val partitions = "spark.sql.shuffle.partitions"
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    def found = Seq(partitions, provider).map(k => k -> spark.conf.getAll.get(k)).toMap
+    val suiteState = found
+    def harnessRuns(): Unit = {
+      Stateful.runTwsToCompletion(spark, dir, "t_conf_tws").count()
+      Streams.runToCompletion(spark,
+        Streams.tumblingCounts(Streams.eventStream(spark, dir)), "t_conf_tumble").count()
+      // a stream that throws in its first micro-batch, after observing
+      // the harness values in effect
+      val inRun = new java.util.concurrent.atomic.AtomicReference[Map[String, Option[String]]]()
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        Streams.runHarnessQuery(spark, "t_conf_throw", Map(provider -> rocks)) { ckpt =>
+          Streams.eventStream(spark, dir).writeStream
+            .option("checkpointLocation", ckpt)
+            .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+              inRun.set(found)
+              throw new IllegalStateException("stream fails mid-run (simulated)")
+            }
+            .start()
+        }
+      }
+      assert(inRun.get == Map(partitions -> Some("4"), provider -> Some(rocks)))
+    }
+    try {
+      spark.conf.set(partitions, "7")
+      spark.conf.set(provider,
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+      val preset = found
+      harnessRuns()
+      assert(found == preset)
+      spark.conf.unset(partitions)
+      spark.conf.unset(provider)
+      harnessRuns()
+      assert(found == Map(partitions -> None, provider -> None))
+    } finally {
+      suiteState.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
+      Seq("t_conf_tws", "t_conf_tumble").foreach(spark.catalog.dropTempView)
+    }
+  }
+
   test("streaming session windows match batch gaps-and-islands") {
     val streamed = Streams.runToCompletion(spark,
       Streams.sessionCounts(Streams.eventStream(spark, dir)), "t_session")
@@ -656,18 +704,23 @@ class StreamingSpec extends AnyFunSuite {
     "and state store — land under the conf dir, and s1/s13/s22 replay " +
     "to identical results") {
     val names = Seq("s1_stream_tumble", "s13_stream_ann_ingest", "s22_cdc_apply")
-    def run(n: String): Set[Seq[Any]] =
-      SparkEntry.queries(n)(spark, dir).collect().map(_.toSeq).toSet
+    // a consumed result releases its backing cut (s13's), as Verify does
+    def run(n: String): Set[Seq[Any]] = {
+      val df = SparkEntry.queries(n)(spark, dir)
+      try df.collect().map(_.toSeq).toSet
+      finally graft.operators.Ckpt.releaseResult(df)
+    }
     val plain = names.map(run)
     val confDir = java.nio.file.Files
       .createTempDirectory("graft-stream-conf-").toString
     try {
       spark.conf.set("spark.graft.checkpointDir", confDir)
       // placement: the minted per-run dir resolves under the conf dir
-      // (resolution order is env override > conf > tmpfs — the env is
-      // unset in-suite, so the conf governs)
+      // (the conf, when set, is the harness base; the mint returns a
+      // qualified `file:` URI)
       val ckpt = graft.streaming.Streams.harnessCheckpointDir(spark, "posture")
-      assert(java.nio.file.Paths.get(ckpt).normalize()
+      val ckptPath = java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(ckpt).toUri.getPath)
+      assert(ckptPath.normalize()
           .startsWith(java.nio.file.Paths.get(confDir).normalize()),
         s"harness checkpoint $ckpt not under conf dir $confDir")
       // the real artifacts land there: run a stream against that dir
@@ -678,7 +731,7 @@ class StreamingSpec extends AnyFunSuite {
         .option("checkpointLocation", ckpt).outputMode("complete").start()
       try q.processAllAvailable() finally q.stop()
       val entries = {
-        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
+        val s = java.nio.file.Files.walk(ckptPath)
         try { import scala.jdk.CollectionConverters._
           s.iterator().asScala.map(_.getFileName.toString).toSet }
         finally s.close()
@@ -686,10 +739,16 @@ class StreamingSpec extends AnyFunSuite {
       assert(entries.contains("offsets") && entries.contains("commits"),
         s"expected offset/commit WALs under $ckpt, found $entries")
       spark.catalog.dropTempView("posture_pin")
+      org.apache.commons.io.FileUtils.deleteDirectory(ckptPath.toFile)
       // replay equivalence: the packaged streaming queries run under
       // the durable posture unchanged
       assert(names.map(run) == plain,
         "conf-dir posture changed a streaming query's result")
+      // each harness run deletes its own dir and never the base
+      val root = new java.io.File(confDir)
+      assert(root.isDirectory, s"conf dir $confDir was removed")
+      assert(root.list().isEmpty,
+        s"residue under $confDir: ${root.list().mkString(", ")}")
     } finally {
       spark.conf.unset("spark.graft.checkpointDir")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(confDir))
