@@ -10,6 +10,9 @@ object Verify {
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
+      case _ =>
+        System.err.println("usage: graft.Verify <sfDir> <outDir> [key1,key2,...]")
+        sys.exit(2)
     }
     val spark = GraftSession.build("graft-verify")
     new java.io.File(outDir).mkdirs()

@@ -4,15 +4,17 @@ import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.LongAdder
+import graft.sources.Sources
 
 /** Sequential job orchestration with row accounting — the reference's
   * main lifecycle (`EtlMain.kt:28-37,42-62`) on Spark's execution model.
   *
   * The coroutine channel + chunked loader (`EtlMain.kt:51,72-88`)
   * disappears: scan→transform→write pipelines inside executor tasks with
-  * bounded memory, and JDBC sinks batch via the writer's `batchsize`
-  * option (2000, matching `EtlMain.kt:74`). The reference's
-  * sent/received counters (`EtlMain.kt:48-50,60-61`) map to:
+  * bounded memory. Sources and sinks go through `Sources`, so every
+  * format it maps (avro too) works and JDBC sinks batch 2000 rows per
+  * insert (matching `EtlMain.kt:74`). The reference's sent/received
+  * counters (`EtlMain.kt:48-50,60-61`) map to:
   *  - sent: an `Observation` on the written plan (no second scan);
   *  - received: executor task output metrics summed by a listener.
   */
@@ -106,18 +108,12 @@ class EtlRunner(spark: SparkSession) {
     sc.addSparkListener(listener)
     val (sent, rowsWritten) =
       try {
-        val writer = observed.write
-          .mode(saveMode)
-          .format(format)
-          .options(options)
+        // a jdbc sink's target is the table named by job.write (Sources
+        // batches its inserts); a file sink's is a dir under targetDir
         val isJdbc = format == "jdbc"
         if (isJdbc)
-          // batched inserts, 2000 rows per batch — parity with the
-          // reference's chunked loader (EtlMain.kt:74); concurrent
-          // connections bounded by partition count (pool-parity with
-          // max 5, DatabaseBean.kt:59).
-          writer.option("batchsize", "2000").option("dbtable", job.write).save()
-        else writer.save(s"$targetDir/${job.write}")
+          Sources.write(observed, format, "", saveMode, options + ("dbtable" -> job.write))
+        else Sources.write(observed, format, s"$targetDir/${job.write}", saveMode, options)
         // Both counters are listener-delivered: the observation completes
         // on the listener bus, and so do the task-end events that feed
         // `written`. `observed` drains the bus first, so both are final
@@ -166,7 +162,7 @@ object EtlRunner {
   def registerSource(spark: SparkSession, viewName: String, path: String,
                      format: String = "parquet",
                      options: Map[String, String] = Map.empty): DataFrame = {
-    val df = spark.read.format(format).options(options).load(path)
+    val df = Sources.read(spark, Sources.SourceSpec(format, path, options = options))
     df.createOrReplaceTempView(viewName)
     df
   }

@@ -261,9 +261,12 @@ object Graph {
     * quadratic wedges). 0 disables the cap. With the cap on, `common`
     * counts only the sub-cap shared items, so the reported jaccard is a
     * LOWER BOUND of the true value (degrees stay unpruned) — the usual
-    * accuracy/cost trade of frequent-item pruning; 0 keeps it exact. */
+    * accuracy/cost trade of frequent-item pruning; 0 keeps it exact, and
+    * so does a cap above `Int.MaxValue` (it takes the uncapped path). A
+    * negative cap throws `IllegalArgumentException`. */
   def neighborJaccard(rel: DataFrame, entityCol: String, itemCol: String,
                       minCommon: Long, maxItemDeg: Long = 0L): DataFrame = {
+    require(maxItemDeg >= 0, s"maxItemDeg must be >= 0 (0 = no cap), got $maxItemDeg")
     val b = rel.select(col(entityCol).as("e"), col(itemCol).as("i")).distinct()
       .transform(Ckpt.cut)
     val deg = b.groupBy(col("e").as("node")).agg(count(lit(1)).as("d"))
@@ -290,9 +293,11 @@ object Graph {
     * with the cap on, `common` counts only sub-cap shared items, so
     * downstream thresholds see a LOWER BOUND of the true shared count —
     * the usual accuracy/cost trade of frequent-item pruning. 0 disables
-    * the cap (exact). */
+    * the cap (exact), and so does a cap above `Int.MaxValue` (it takes
+    * the uncapped path). A negative cap throws `IllegalArgumentException`. */
   def coOccurrencePairs(rel: DataFrame, entityCol: String, itemCol: String,
                         minShared: Long, maxItemDeg: Long = 0L): DataFrame = {
+    require(maxItemDeg >= 0, s"maxItemDeg must be >= 0 (0 = no cap), got $maxItemDeg")
     val b = rel.select(col(entityCol).as("e"), col(itemCol).as("i")).distinct()
     pairsFromDeduped(b, minShared, maxItemDeg)
   }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.etl.{Generator, SchemaTools}
@@ -9,14 +8,13 @@ import graft.streaming.Streams
 
 /** Streaming, ETL-parity, and multimodal queries.
   *
-  * The two `s*` entries execute REAL Structured Streaming queries
+  * The `s*` entries execute REAL Structured Streaming queries
   * (file-source replay → windowed agg → memory sink, run to completion)
-  * and are checked against DuckDB batch oracles — streaming results must
-  * equal their batch equivalents on bounded input.
+  * and, except the s16 sketch, are checked against DuckDB batch
+  * oracles — streaming results must equal their batch equivalents on
+  * bounded input.
   */
 object Extended {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Per-process work dir for replay inputs/checkpoints, WIPED on entry:
     * bench reps reuse one path instead of leaking a replay corpus per
     * invocation, and the `Tables.processWorkDir` shutdown hook removes
@@ -28,17 +26,59 @@ object Extended {
     d
   }
 
-  val queries: Map[String, Q] = Map(
+  // s3 (flatMapGroupsWithState) and s9 (transformWithState) run the
+  // same semantics through two stateful APIs — one shared oracle string
+  // pins both (an edit to one cannot strand the other)
+  private val statefulOracle: String =
+    """SELECT user_id, event_id,
+      |  count(1) OVER w AS n_events,
+      |  round(sum(value) OVER w, 4) AS total_value
+      |FROM events
+      |WINDOW w AS (PARTITION BY user_id ORDER BY event_id
+      |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+      |ORDER BY user_id, event_id""".stripMargin
+
+  // s1's oracle, shared by s23 (s1 through the Avro wire hop)
+  private val tumbleSql: String =
+    """SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start, event_type, count(1) AS n
+      |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin
+
+  // s4's oracle, shared by s10 (the same dedup within a watermark)
+  private val streamDedupSql: String =
+    """SELECT event_type, count(1) AS n
+      |FROM (SELECT DISTINCT event_id, event_type FROM events) d
+      |GROUP BY event_type ORDER BY event_type""".stripMargin
+
+  val declared: Seq[Query] = Seq(
 
     // tumbling 1 h windows × event_type via Structured Streaming
-    "s1_stream_tumble" -> { (s, dir) =>
+    Query("s1_stream_tumble", Oracle(tumbleSql)) { (s, dir) =>
       Streams.runToCompletion(s,
           Streams.tumblingCounts(Streams.eventStream(s, dir)), "s1_tumble")
         .orderBy("window_start", "event_type")
     },
 
     // 30-minute-gap session windows per user via Structured Streaming
-    "s2_stream_session" -> { (s, dir) =>
+    // gaps-and-islands sessionization == Spark session_window on bounded
+    // input (new session when the gap is >= 30 min; Spark's window end is
+    // exclusive at start+gap)
+    Query("s2_stream_session", Oracle(
+      """WITH d AS (
+        |  SELECT user_id, ts,
+        |    CASE WHEN lag(ts) OVER w IS NULL
+        |           OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
+        |         THEN 1 ELSE 0 END AS new_s
+        |  FROM events
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+        |s AS (
+        |  SELECT user_id, ts,
+        |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
+        |                     ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM d)
+        |SELECT min(ts) AS session_start, user_id,
+        |       count(1) AS n_events, max(ts) AS last_ts
+        |FROM s GROUP BY user_id, sid
+        |ORDER BY user_id, session_start""".stripMargin)) { (s, dir) =>
       Streams.runToCompletion(s,
           Streams.sessionCounts(Streams.eventStream(s, dir)), "s2_session")
         .orderBy("user_id", "session_start")
@@ -47,7 +87,7 @@ object Extended {
     // custom stateful streaming (flatMapGroupsWithState): per-user
     // running totals — a REAL stateful streaming run, oracle-checked
     // against the batch cumulative-window SQL
-    "s3_stream_stateful" -> { (s, dir) =>
+    Query("s3_stream_stateful", Oracle(statefulOracle)) { (s, dir) =>
       // totals rounded: DuckDB windowed SUM uses segment-tree (pairwise)
       // addition whose last bits differ from sequential accumulation
       graft.streaming.Stateful.runToCompletion(s, dir, "s3_stateful")
@@ -58,7 +98,7 @@ object Extended {
     // streaming deduplication: a doubled replay of the event stream
     // deduped on event_id inside the stream (dropDuplicates + watermark
     // bounds the dedup state by event time) must equal the distinct set
-    "s4_stream_dedup" -> { (s, dir) =>
+    Query("s4_stream_dedup", Oracle(streamDedupSql)) { (s, dir) =>
       val ev = Streams.eventStream(s, dir)
       val doubled = ev.union(ev)
       // the event-time column must be part of the dedup key for the
@@ -79,8 +119,10 @@ object Extended {
     // timestamps (s4's key must include ts and so would MISS such
     // retries; the within-watermark variant collapses them —
     // StreamingSpec pins exactly that divergence). On the doubled
-    // exact-copy replay both dedup, so s10 shares s4's distinct oracle.
-    "s10_dedup_within_wm" -> { (s, dir) =>
+    // exact-copy replay both dedup, so s10 shares s4's distinct oracle
+    // (the API divergence on unequal-ts retries is spec-pinned, not
+    // oracle-expressible on this fixture).
+    Query("s10_dedup_within_wm", Oracle(streamDedupSql)) { (s, dir) =>
       val ev = Streams.eventStream(s, dir)
       val doubled = ev.union(ev)
       val deduped = doubled
@@ -94,7 +136,15 @@ object Extended {
     // stream-stream LEFT SEMI join: clicks that converted within 1 h,
     // each emitted once on first match — no watermark-cutoff term in
     // the oracle (matched rows emit immediately; see clickPurchaseSemiJoin)
-    "s11_stream_semi_join" -> { (s, dir) =>
+    // semi = DISTINCT matched left rows; no cutoff term (unlike s8) —
+    // matched rows emit on arrival, unmatched rows never emit
+    Query("s11_stream_semi_join", Oracle(
+      """SELECT DISTINCT c.user_id, c.event_id AS click_id, c.ts AS click_ts
+        |FROM events c JOIN events p
+        |  ON c.user_id = p.user_id
+        | AND c.event_type = 'click' AND p.event_type = 'purchase'
+        | AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
+        |ORDER BY 1, 2""".stripMargin)) { (s, dir) =>
       Streams.runToCompletionAppend(s,
           Streams.clickPurchaseSemiJoin(Streams.eventStream(s, dir)), "s11_semi")
         .orderBy("user_id", "click_id")
@@ -103,7 +153,14 @@ object Extended {
     // watermarked stream-stream inner join (clicks ⋈ purchases within
     // 1 h, same user) — real Structured Streaming, equal to the batch
     // self-join oracle on bounded input
-    "s5_stream_join" -> { (s, dir) =>
+    Query("s5_stream_join", Oracle(
+      """SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
+        |  c.ts AS click_ts, p.ts AS purchase_ts
+        |FROM events c JOIN events p
+        |  ON c.user_id = p.user_id
+        | AND c.event_type = 'click' AND p.event_type = 'purchase'
+        | AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
+        |ORDER BY c.user_id, click_id, purchase_id""".stripMargin)) { (s, dir) =>
       Streams.runToCompletionAppend(s,
           Streams.clickPurchaseJoin(Streams.eventStream(s, dir)), "s5_join")
         .orderBy("user_id", "click_id", "purchase_id")
@@ -119,7 +176,19 @@ object Extended {
     // from doc_id (1 s apart — arrival time in production); the default
     // watermark/TTL keep all state resident across this bounded replay,
     // so the result equals the global-dedup batch oracle.
-    "s12_corpus_dedup" -> { (s, dir) =>
+    // the replayed stream reproduces batch c31 exactly (ordered
+    // contiguous chunks → first-seen == min doc_id), so s12 shares its
+    // oracle shape: within-crawl min-id winners minus corpus texts
+    Query("s12_corpus_dedup", Oracle(
+      """WITH b AS (SELECT * FROM documents WHERE doc_id % 7 = 0),
+        |seen AS (SELECT DISTINCT text FROM documents WHERE doc_id % 7 <> 0),
+        |w AS (
+        |  SELECT b.* FROM b
+        |  JOIN (SELECT text, min(doc_id) AS kid FROM b GROUP BY text) k
+        |    ON b.doc_id = k.kid)
+        |SELECT doc_id, source, n_chars FROM w
+        |WHERE NOT EXISTS (SELECT 1 FROM seen WHERE seen.text = w.text)
+        |ORDER BY doc_id""".stripMargin)) { (s, dir) =>
       val d = graft.Tables.load(s, dir, "documents")
       val work = freshWork("s12")
       val schema = Streams.writeOrderedReplay(
@@ -158,7 +227,9 @@ object Extended {
     // codes and answers exactly (unbounded rerank), so the result
     // shares the brute-force kNN oracle over the FULL embeddings
     // table — any batch-boundary or append artifact would hash-mismatch
-    "s13_stream_ann_ingest" -> { (s, dir) =>
+    // exact-serve contract: streamed-in codes + unbounded rerank ==
+    // brute-force kNN on the full table (same oracle as c6/c68)
+    Query("s13_stream_ann_ingest", Oracle(LayerC.knnOracleSql)) { (s, dir) =>
       import graft.operators.{AnnIndex, Similarity}
       val e = graft.Tables.load(s, dir, "embeddings")
       val (dim, m, ksub) = (64, 8, 16)
@@ -191,8 +262,9 @@ object Extended {
     // streaming rate anomaly: per-window volume z-scored in-stream
     // against the batch-fit baseline mean/σ (passed as literals — in
     // production, fit on history), equal to the batch c88 on bounded
-    // replay, sharing its oracle verbatim
-    "s18_stream_anomaly" -> { (s, dir) =>
+    // replay, sharing its oracle string (an edit to one cannot strand
+    // the other)
+    Query("s18_stream_anomaly", Oracle(LayerC.rateAnomalySql)) { (s, dir) =>
       val st = Tables.load(s, dir, "events")
         .groupBy(window(col("ts"), "1 hour"))
         .agg(count(lit(1)).as("n"))
@@ -211,7 +283,17 @@ object Extended {
     // aggregates cannot host window functions, so ranking at the serving
     // layer is the real-world shape. Ties break on event_type for a
     // total order
-    "s19_stream_topk" -> { (s, dir) =>
+    Query("s19_stream_topk", Oracle(
+      """WITH wc AS (
+        |  SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
+        |    event_type, count(1) AS n
+        |  FROM events GROUP BY 1, 2),
+        |r AS (
+        |  SELECT *, row_number() OVER (
+        |    PARTITION BY window_start ORDER BY n DESC, event_type) AS rnk
+        |  FROM wc)
+        |SELECT window_start, event_type, n, CAST(rnk AS INTEGER) AS rnk
+        |FROM r WHERE rnk <= 3 ORDER BY window_start, rnk""".stripMargin)) { (s, dir) =>
       val counts = Streams.runToCompletion(s,
         Streams.tumblingCounts(Streams.eventStream(s, dir)), "s19_topk")
       val w = org.apache.spark.sql.expressions.Window
@@ -226,7 +308,26 @@ object Extended {
     // replayed as a stream, each window's tokens scored -ln p under the
     // static train-corpus LM (add-one smoothed) — c82 at ingest, equal
     // to the batch windowed average on bounded input
-    "s17_stream_drift" -> { (s, dir) =>
+    // the batch equivalent of the streamed drift monitor: c82's LM
+    // arithmetic, windowed on the synthesized ingest timeline
+    Query("s17_stream_drift", Oracle(
+      """WITH trt AS (
+        |  SELECT unnest(string_split_regex(lower(text), '\s+')) AS token
+        |  FROM documents WHERE doc_id % 29 <> 0),
+        |t2 AS (SELECT token FROM trt WHERE token <> ''),
+        |freq AS (SELECT token, count(1) AS f FROM t2 GROUP BY token),
+        |nv AS (SELECT CAST(sum(f) AS BIGINT) + count(1) AS denom FROM freq),
+        |tet AS (
+        |  SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS token
+        |  FROM documents WHERE doc_id % 29 = 0),
+        |te2 AS (SELECT doc_id, token FROM tet WHERE token <> ''),
+        |sc AS (
+        |  SELECT make_timestamp((1700000000 + doc_id * 300) * 1000000) AS ingest_ts,
+        |    -ln((coalesce(f, 0) + 1.0) / CAST(denom AS DOUBLE)) AS nll
+        |  FROM te2 LEFT JOIN freq USING (token) CROSS JOIN nv)
+        |SELECT time_bucket(INTERVAL '1 hour', ingest_ts) AS window_start,
+        |  round(avg(nll), 6) AS avg_nll, count(1) AS n_tokens
+        |FROM sc GROUP BY 1 ORDER BY window_start""".stripMargin)) { (s, dir) =>
       val d = graft.Tables.load(s, dir, "documents")
       val trainToks = d.filter(col("doc_id") % 29 =!= 0)
         .select(explode(split(lower(col("text")), "\\s+")).as("token"))
@@ -272,7 +373,7 @@ object Extended {
     // real streaming aggregation (rows-only — sketch estimates have no
     // DuckDB-equal value; ≤5% error vs the exact per-window distinct is
     // asserted in ApproxSpec)
-    "s16_stream_hll" -> { (s, dir) =>
+    Query("s16_stream_hll", RowsOnly) { (s, dir) =>
       Streams.runToCompletion(s,
           Streams.windowApproxUsers(Streams.eventStream(s, dir)), "s16_hll")
         .orderBy("window_start")
@@ -284,7 +385,17 @@ object Extended {
     // stateful windowed aggregation — per (1 h window, source) counts
     // of the survivors, equal to the batch filter+group oracle on
     // bounded input
-    "s14_stream_quality_gate" -> { (s, dir) =>
+    // the batch equivalent of the gated stream: same synthesized
+    // 1 s-per-doc timeline, same word-count gate, same 1 h buckets
+    Query("s14_stream_quality_gate", Oracle(
+      """WITH d AS (
+        |  SELECT source, n_chars,
+        |    make_timestamp((1700000000 + doc_id) * 1000000) AS ingest_ts
+        |  FROM documents
+        |  WHERE len(string_split_regex(text, '\s+')) BETWEEN 40 AND 100)
+        |SELECT time_bucket(INTERVAL '1 hour', ingest_ts) AS window_start,
+        |  source, count(1) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
+        |FROM d GROUP BY 1, 2 ORDER BY window_start, source""".stripMargin)) { (s, dir) =>
       val d = graft.Tables.load(s, dir, "documents")
       val work = freshWork("s14")
       val schema = Streams.writeOrderedReplay(
@@ -307,7 +418,18 @@ object Extended {
     // stream, windows matched against the static benchmark window
     // relation, per-doc contaminated-window counts equal to the batch
     // join oracle on bounded input
-    "s15_stream_decontam" -> { (s, dir) =>
+    // the batch equivalent of the streamed decontam join: c77's window
+    // derivation, counts per contaminated train doc
+    Query("s15_stream_decontam", Oracle(
+      """WITH w AS (
+        |  SELECT doc_id, i AS pos, substring(text, i, 30) AS win
+        |  FROM documents,
+        |    LATERAL (SELECT unnest(range(1, greatest(length(text) - 29, 1) + 1)) AS i) u),
+        |b AS (SELECT DISTINCT win FROM w WHERE doc_id % 29 = 0)
+        |SELECT w.doc_id, count(1) AS n_contam_windows
+        |FROM w JOIN b USING (win)
+        |WHERE w.doc_id % 29 <> 0
+        |GROUP BY w.doc_id ORDER BY doc_id""".stripMargin)) { (s, dir) =>
       val d = graft.Tables.load(s, dir, "documents")
       // static-side discipline (see s17): the benchmark-window relation
       // is an explode+distinct — a real shuffle — and a stream-static
@@ -342,7 +464,10 @@ object Extended {
     // stream-static join: the event stream enriched against the static
     // customer dimension mid-stream, then aggregated — the standard
     // streaming-enrichment shape (static side re-read per micro-batch)
-    "s6_stream_static_join" -> { (s, dir) =>
+    Query("s6_stream_static_join", Oracle(
+      """SELECT c_mktsegment, count(1) AS n
+        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)) { (s, dir) =>
       val ev = Streams.eventStream(s, dir)
       val cust = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
@@ -360,7 +485,18 @@ object Extended {
     // micro-batch; events before a customer's first interval (or with no
     // dimension rows at all) keep a '(none)' bucket via left_outer —
     // "what priority tier was this customer in when the event happened"
-    "s20_scd2_enrich" -> { (s, dir) =>
+    Query("s20_scd2_enrich", Oracle(
+      """WITH dim AS (
+        |  SELECT o_custkey, o_orderpriority AS prio,
+        |    CAST(o_orderdate AS TIMESTAMP) AS valid_from,
+        |    lead(CAST(o_orderdate AS TIMESTAMP)) OVER (
+        |      PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS valid_to
+        |  FROM orders)
+        |SELECT coalesce(d.prio, '(none)') AS prio, count(1) AS n
+        |FROM events e LEFT JOIN dim d
+        |  ON e.user_id = d.o_custkey AND e.ts >= d.valid_from
+        |  AND (d.valid_to IS NULL OR e.ts < d.valid_to)
+        |GROUP BY 1 ORDER BY prio""".stripMargin)) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("valid_from").asc, col("o_orderkey").asc)
@@ -391,7 +527,12 @@ object Extended {
     // the q96 percentile_approx sketch (mergeable, constant state) is
     // the corpus-scale variant; exact is used here precisely because it
     // is DuckDB-checkable
-    "s21_stream_percentile" -> { (s, dir) =>
+    Query("s21_stream_percentile", Oracle(
+      """SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
+        |  round(percentile_cont(0.5) WITHIN GROUP (ORDER BY value), 6) AS p50,
+        |  round(percentile_cont(0.95) WITHIN GROUP (ORDER BY value), 6) AS p95,
+        |  count(1) AS n
+        |FROM events GROUP BY 1 ORDER BY window_start""".stripMargin)) { (s, dir) =>
       val agged = Streams.eventStream(s, dir)
         .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "1 hour"))
@@ -410,7 +551,7 @@ object Extended {
     // codec — decoded IN-STREAM, then watermarked and windowed exactly
     // like s1, whose oracle it shares verbatim: streaming/batch
     // identity must survive the wire hop
-    "s23_avro_stream" -> { (s, dir) =>
+    Query("s23_avro_stream", Oracle(tumbleSql)) { (s, dir) =>
       import graft.functions.AvroWire.{avroSchemaFor, from_avro_wire, to_avro_wire}
       val work = freshWork("s23")
       val ev = Tables.load(s, dir, "events")
@@ -442,7 +583,24 @@ object Extended {
     // via foreachBatch — the ingest half of the CDC loop (q109 extract,
     // q63 batch apply). The mirror after the last batch must equal the
     // batch latest-change-per-key relation
-    "s22_cdc_apply" -> { (s, dir) =>
+    // the mirror after the last micro-batch == latest change per key,
+    // tombstoned keys absent — order-insensitive by the tombstone
+    // retention, so the replay chunking cannot move the answer
+    Query("s22_cdc_apply", Oracle(
+      """WITH c AS (
+        |  SELECT user_id, ts, event_id,
+        |    CASE WHEN event_type = 'click' THEN 'delete'
+        |         ELSE 'upsert' END AS op,
+        |    value
+        |  FROM events),
+        |r AS (
+        |  SELECT user_id, op, value, ts,
+        |    row_number() OVER (PARTITION BY user_id
+        |      ORDER BY ts DESC, event_id DESC) AS rk
+        |  FROM c)
+        |SELECT user_id, value AS last_value, ts AS last_ts
+        |FROM r WHERE rk = 1 AND op <> 'delete'
+        |ORDER BY user_id""".stripMargin)) { (s, dir) =>
       val work = freshWork("s22")
       val ev = Tables.load(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"),
@@ -461,7 +619,8 @@ object Extended {
 
     // sliding (overlapping) windows via Structured Streaming — the
     // streaming counterpart of the batch q70, sharing its oracle
-    "s7_stream_sliding" -> { (s, dir) =>
+    // string (an edit to one cannot strand the other)
+    Query("s7_stream_sliding", Oracle(Relational4.slidingWindowSql)) { (s, dir) =>
       Streams.runToCompletion(s,
           Streams.slidingCounts(Streams.eventStream(s, dir)), "s7_sliding")
         .orderBy("window_start", "event_type")
@@ -471,7 +630,42 @@ object Extended {
     // with no purchase emit null-augmented rows once the watermark
     // passes their 1 h match horizon (clicks still inside the horizon at
     // end-of-stream stay in state — the oracle carries the same cutoff)
-    "s8_stream_outer_join" -> { (s, dir) =>
+    // the final watermark is min(max click_ts, max purchase_ts) - 2 h
+    // (Spark's multi-input watermark policy is min); an unmatched click
+    // emits its null row only if click_ts + 1 h < that watermark.
+    // The STRICT < pins Spark's observed eviction boundary: a click
+    // whose match horizon lands EXACTLY on the final watermark keeps
+    // its state (no null row) — StreamingSpec ("outer-join null row…")
+    // locks that tie case with a synthetic fixture, so a fixture
+    // regeneration that lands a click on the boundary cannot silently
+    // flip this oracle's <.
+    // Spark sorts NULL first — DuckDB defaults NULLS LAST, so pin it.
+    Query("s8_stream_outer_join", Oracle(
+      """WITH wm AS (
+        |  SELECT least(
+        |    (SELECT max(ts) FROM events WHERE event_type = 'click'),
+        |    (SELECT max(ts) FROM events WHERE event_type = 'purchase'))
+        |    - INTERVAL 2 HOUR AS w),
+        |matched AS (
+        |  SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
+        |         c.ts AS click_ts, p.ts AS purchase_ts
+        |  FROM events c JOIN events p
+        |    ON c.user_id = p.user_id
+        |   AND c.event_type = 'click' AND p.event_type = 'purchase'
+        |   AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR),
+        |unmatched AS (
+        |  SELECT c.user_id, c.event_id AS click_id, NULL::BIGINT AS purchase_id,
+        |         c.ts AS click_ts, NULL::TIMESTAMP AS purchase_ts
+        |  FROM events c CROSS JOIN wm
+        |  WHERE c.event_type = 'click'
+        |    AND c.ts + INTERVAL 1 HOUR < wm.w
+        |    AND NOT EXISTS (
+        |      SELECT 1 FROM events p
+        |      WHERE p.user_id = c.user_id AND p.event_type = 'purchase'
+        |        AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR))
+        |SELECT * FROM matched
+        |UNION ALL SELECT * FROM unmatched
+        |ORDER BY user_id, click_id, purchase_id NULLS FIRST""".stripMargin)) { (s, dir) =>
       Streams.runToCompletionAppend(s,
           Streams.clickPurchaseLeftJoin(Streams.eventStream(s, dir)), "s8_outer")
         .orderBy("user_id", "click_id", "purchase_id")
@@ -480,20 +674,20 @@ object Extended {
     // the same running totals on Spark 4's transformWithState (typed
     // named state + RocksDB provider) — shares s3's oracle: two
     // different stateful APIs, one pinned semantics
-    "s9_stream_tws" -> { (s, dir) =>
+    Query("s9_stream_tws", Oracle(statefulOracle)) { (s, dir) =>
       graft.streaming.Stateful.runTwsToCompletion(s, dir, "s9_tws")
         .withColumn("total_value", round(col("total_value"), 4))
         .orderBy("user_id", "event_id")
     },
 
     // deterministic seeded generator (reference `import` entry point)
-    "e1_generator" -> { (s, _) =>
+    Query("e1_generator", RowsOnly) { (s, _) =>
       Generator.addresses(s, 10000L).orderBy("id")
     },
 
     // the reference demo job (addrx): generate → project → filter →
     // uppercase-normalize (ClassMapMapper semantics)
-    "e2_etl_demo" -> { (s, _) =>
+    Query("e2_etl_demo", RowsOnly) { (s, _) =>
       SchemaTools.normalizeUppercase(
         Generator.addresses(s, 20000L)
           .select("id", "street_address", "city", "state", "postal_code", "country")
@@ -505,7 +699,7 @@ object Extended {
     // extraction (images REALLY decoded via javax.imageio, audio REALLY
     // decoded via javax.sound.sampled, video REALLY decoded as
     // MJPEG/AVI frames) → per-mime aggregate over decoded dimensions
-    "m1_multimodal_features" -> { (s, dir) =>
+    Query("m1_multimodal_features", RowsOnly) { (s, dir) =>
       val feats = Multimodal.extractFeatures(s,
         Multimodal.attachBinaryCached(s, dir))
       feats.groupBy("mime")
@@ -524,7 +718,7 @@ object Extended {
     // (no SQL engine decodes AVI); the boundary arithmetic is
     // value-pinned in MultimodalSpec with planted two-scene videos
     // (identical frames score exactly 0, the planted cut scores > 0)
-    "m8_scene_cuts" -> { (s, dir) =>
+    Query("m8_scene_cuts", RowsOnly) { (s, dir) =>
       Multimodal.sceneCutStats(
           Multimodal.attachBinaryCached(s, dir),
           threshold = 0.2)
@@ -539,7 +733,7 @@ object Extended {
     // for transcription. Rows-only (no SQL engine decodes WAV); the
     // arithmetic is value-pinned in MultimodalSpec on planted silent,
     // full-scale-square, and known-amplitude-sine clips
-    "m9_audio_quality" -> { (s, dir) =>
+    Query("m9_audio_quality", RowsOnly) { (s, dir) =>
       Multimodal.audioQualityStats(
           Multimodal.attachBinaryCached(s, dir))
         .select(col("doc_id"), col("n_samples"), col("duration_ms"),
@@ -562,7 +756,7 @@ object Extended {
     // image yields 1-9 patches and edge remainders drop (the ViT
     // convention; production resizes to a patch multiple first).
     // Rows-only: no SQL engine decodes PNG/JPEG
-    "m12_image_patches" -> { (s, dir) =>
+    Query("m12_image_patches", RowsOnly) { (s, dir) =>
       Multimodal.imagePatches(Multimodal.attachBinaryCached(s, dir),
           patchSize = 8)
         .select(col("doc_id"), col("patch_idx"), col("px"), col("py"),
@@ -570,7 +764,7 @@ object Extended {
         .orderBy("doc_id", "patch_idx")
     },
 
-    "m10_image_quality" -> { (s, dir) =>
+    Query("m10_image_quality", RowsOnly) { (s, dir) =>
       Multimodal.imageQualityStats(
           Multimodal.attachBinaryCached(s, dir))
         .select(col("doc_id"), col("width"), col("height"),
@@ -585,7 +779,7 @@ object Extended {
     // the static-scene detector billing a slideshow as its unique
     // content, not its frame count. Rows-only (no SQL engine decodes
     // AVI); planted-slideshow arithmetic pinned in MultimodalSpec
-    "m11_frame_redundancy" -> { (s, dir) =>
+    Query("m11_frame_redundancy", RowsOnly) { (s, dir) =>
       Multimodal.frameRedundancy(
           Multimodal.attachBinaryCached(s, dir))
         .select(col("doc_id"), col("n_frames"), col("n_distinct"),
@@ -595,7 +789,7 @@ object Extended {
 
     // REAL video frame sampling: MJPEG/AVI payloads decode to frames,
     // 4 evenly-spaced frames re-encode as PNG rows per video
-    "m2_frame_sample" -> { (s, dir) =>
+    Query("m2_frame_sample", RowsOnly) { (s, dir) =>
       Multimodal.sampleFrames(
           Multimodal.attachBinaryCached(s, dir), n = 4)
         .groupBy("doc_id")
@@ -609,7 +803,7 @@ object Extended {
     // perceptual image hashing: per-image 64-bit aHash (rows-only —
     // DuckDB cannot decode JPEG/PNG; the hamming near-dup pair join is
     // value-pinned in MultimodalSpec with planted re-encodes)
-    "m3_image_phash" -> { (s, dir) =>
+    Query("m3_image_phash", RowsOnly) { (s, dir) =>
       Multimodal.imageHashes(
           Multimodal.attachBinaryCached(s, dir))
         .orderBy("doc_id")
@@ -620,7 +814,7 @@ object Extended {
     // (rows-only — DuckDB cannot decode WAV; gain-invariance, noise
     // robustness, and the hamming near-dup join are value-pinned in
     // MultimodalSpec)
-    "m4_audio_fingerprint" -> { (s, dir) =>
+    Query("m4_audio_fingerprint", RowsOnly) { (s, dir) =>
       Multimodal.audioFingerprints(
           Multimodal.attachBinaryCached(s, dir))
         .orderBy("doc_id")
@@ -630,7 +824,7 @@ object Extended {
     // with the real decoder — the corrupt-file detector run before
     // paying feature extraction (rows-only — DuckDB cannot decode;
     // corrupt-payload counting is value-pinned in MultimodalSpec)
-    "m6_decode_health" -> { (s, dir) =>
+    Query("m6_decode_health", RowsOnly) { (s, dir) =>
       Multimodal.decodeHealth(
           Multimodal.attachBinaryCached(s, dir))
         .orderBy("mime")
@@ -642,7 +836,7 @@ object Extended {
     // relation at the recall-total bound (8 bands → every pair within
     // hamming ≤ 7 shares a clean band), eight cumulative counts derived
     // from it. Rows-only: DuckDB cannot decode the images
-    "m7_phash_sensitivity" -> { (s, dir) =>
+    Query("m7_phash_sensitivity", RowsOnly) { (s, dir) =>
       import s.implicits._
       val hashed = Multimodal.imageHashes(
         Multimodal.attachBinaryCached(s, dir))
@@ -672,255 +866,10 @@ object Extended {
     // dropped/reordered frames (rows-only — DuckDB cannot decode AVI;
     // frame-drop invariance and the planted-duplicate hamming join are
     // value-pinned in MultimodalSpec)
-    "m5_video_phash" -> { (s, dir) =>
+    Query("m5_video_phash", RowsOnly) { (s, dir) =>
       Multimodal.videoSignatures(
           Multimodal.attachBinaryCached(s, dir))
         .orderBy("doc_id")
     }
-  )
-
-  // s3 (flatMapGroupsWithState) and s9 (transformWithState) run the
-  // same semantics through two stateful APIs — one shared oracle string
-  // pins both (an edit to one cannot strand the other)
-  private val statefulOracle: String =
-    """SELECT user_id, event_id,
-      |  count(1) OVER w AS n_events,
-      |  round(sum(value) OVER w, 4) AS total_value
-      |FROM events
-      |WINDOW w AS (PARTITION BY user_id ORDER BY event_id
-      |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      |ORDER BY user_id, event_id""".stripMargin
-
-  val oracle: Map[String, String] = Map(
-    "s1_stream_tumble" ->
-      """SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start, event_type, count(1) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-
-    // streaming/batch identity is structural: s7 runs the SAME oracle
-    // string as the batch q70 — an edit to one cannot strand the other
-    "s7_stream_sliding" -> Relational4.oracle("q70_sliding_window"),
-
-    // s23 = s1 through the Avro wire hop: the decode must be the
-    // identity, so the oracle string is shared verbatim
-    "s23_avro_stream" ->
-      """SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start, event_type, count(1) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-
-    "s4_stream_dedup" ->
-      """SELECT event_type, count(1) AS n
-        |FROM (SELECT DISTINCT event_id, event_type FROM events) d
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // exact-copy duplicates collapse under both dedup APIs → s10 shares
-    // s4's oracle verbatim (the API divergence on unequal-ts retries is
-    // spec-pinned, not oracle-expressible on this fixture)
-    "s10_dedup_within_wm" ->
-      """SELECT event_type, count(1) AS n
-        |FROM (SELECT DISTINCT event_id, event_type FROM events) d
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "s6_stream_static_join" ->
-      """SELECT c_mktsegment, count(1) AS n
-        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    // the replayed stream reproduces batch c31 exactly (ordered
-    // contiguous chunks → first-seen == min doc_id), so s12 shares its
-    // oracle shape: within-crawl min-id winners minus corpus texts
-    // streaming/batch identity is structural: s18 runs the SAME oracle
-    // string as the batch c88 (an edit to one cannot strand the other)
-    "s18_stream_anomaly" -> LayerC.oracle("c88_rate_anomaly"),
-
-    "s21_stream_percentile" ->
-      """SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
-        |  round(percentile_cont(0.5) WITHIN GROUP (ORDER BY value), 6) AS p50,
-        |  round(percentile_cont(0.95) WITHIN GROUP (ORDER BY value), 6) AS p95,
-        |  count(1) AS n
-        |FROM events GROUP BY 1 ORDER BY window_start""".stripMargin,
-
-    // the mirror after the last micro-batch == latest change per key,
-    // tombstoned keys absent — order-insensitive by the tombstone
-    // retention, so the replay chunking cannot move the answer
-    "s22_cdc_apply" ->
-      """WITH c AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN event_type = 'click' THEN 'delete'
-        |         ELSE 'upsert' END AS op,
-        |    value
-        |  FROM events),
-        |r AS (
-        |  SELECT user_id, op, value, ts,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY ts DESC, event_id DESC) AS rk
-        |  FROM c)
-        |SELECT user_id, value AS last_value, ts AS last_ts
-        |FROM r WHERE rk = 1 AND op <> 'delete'
-        |ORDER BY user_id""".stripMargin,
-
-    "s20_scd2_enrich" ->
-      """WITH dim AS (
-        |  SELECT o_custkey, o_orderpriority AS prio,
-        |    CAST(o_orderdate AS TIMESTAMP) AS valid_from,
-        |    lead(CAST(o_orderdate AS TIMESTAMP)) OVER (
-        |      PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS valid_to
-        |  FROM orders)
-        |SELECT coalesce(d.prio, '(none)') AS prio, count(1) AS n
-        |FROM events e LEFT JOIN dim d
-        |  ON e.user_id = d.o_custkey AND e.ts >= d.valid_from
-        |  AND (d.valid_to IS NULL OR e.ts < d.valid_to)
-        |GROUP BY 1 ORDER BY prio""".stripMargin,
-
-    "s19_stream_topk" ->
-      """WITH wc AS (
-        |  SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
-        |    event_type, count(1) AS n
-        |  FROM events GROUP BY 1, 2),
-        |r AS (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY window_start ORDER BY n DESC, event_type) AS rnk
-        |  FROM wc)
-        |SELECT window_start, event_type, n, CAST(rnk AS INTEGER) AS rnk
-        |FROM r WHERE rnk <= 3 ORDER BY window_start, rnk""".stripMargin,
-
-    // the batch equivalent of the streamed drift monitor: c82's LM
-    // arithmetic, windowed on the synthesized ingest timeline
-    "s17_stream_drift" ->
-      """WITH trt AS (
-        |  SELECT unnest(string_split_regex(lower(text), '\s+')) AS token
-        |  FROM documents WHERE doc_id % 29 <> 0),
-        |t2 AS (SELECT token FROM trt WHERE token <> ''),
-        |freq AS (SELECT token, count(1) AS f FROM t2 GROUP BY token),
-        |nv AS (SELECT CAST(sum(f) AS BIGINT) + count(1) AS denom FROM freq),
-        |tet AS (
-        |  SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS token
-        |  FROM documents WHERE doc_id % 29 = 0),
-        |te2 AS (SELECT doc_id, token FROM tet WHERE token <> ''),
-        |sc AS (
-        |  SELECT make_timestamp((1700000000 + doc_id * 300) * 1000000) AS ingest_ts,
-        |    -ln((coalesce(f, 0) + 1.0) / CAST(denom AS DOUBLE)) AS nll
-        |  FROM te2 LEFT JOIN freq USING (token) CROSS JOIN nv)
-        |SELECT time_bucket(INTERVAL '1 hour', ingest_ts) AS window_start,
-        |  round(avg(nll), 6) AS avg_nll, count(1) AS n_tokens
-        |FROM sc GROUP BY 1 ORDER BY window_start""".stripMargin,
-
-    // the batch equivalent of the streamed decontam join: c77's window
-    // derivation, counts per contaminated train doc
-    "s15_stream_decontam" ->
-      """WITH w AS (
-        |  SELECT doc_id, i AS pos, substring(text, i, 30) AS win
-        |  FROM documents,
-        |    LATERAL (SELECT unnest(range(1, greatest(length(text) - 29, 1) + 1)) AS i) u),
-        |b AS (SELECT DISTINCT win FROM w WHERE doc_id % 29 = 0)
-        |SELECT w.doc_id, count(1) AS n_contam_windows
-        |FROM w JOIN b USING (win)
-        |WHERE w.doc_id % 29 <> 0
-        |GROUP BY w.doc_id ORDER BY doc_id""".stripMargin,
-
-    // the batch equivalent of the gated stream: same synthesized
-    // 1 s-per-doc timeline, same word-count gate, same 1 h buckets
-    "s14_stream_quality_gate" ->
-      """WITH d AS (
-        |  SELECT source, n_chars,
-        |    make_timestamp((1700000000 + doc_id) * 1000000) AS ingest_ts
-        |  FROM documents
-        |  WHERE len(string_split_regex(text, '\s+')) BETWEEN 40 AND 100)
-        |SELECT time_bucket(INTERVAL '1 hour', ingest_ts) AS window_start,
-        |  source, count(1) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM d GROUP BY 1, 2 ORDER BY window_start, source""".stripMargin,
-
-    "s12_corpus_dedup" ->
-      """WITH b AS (SELECT * FROM documents WHERE doc_id % 7 = 0),
-        |seen AS (SELECT DISTINCT text FROM documents WHERE doc_id % 7 <> 0),
-        |w AS (
-        |  SELECT b.* FROM b
-        |  JOIN (SELECT text, min(doc_id) AS kid FROM b GROUP BY text) k
-        |    ON b.doc_id = k.kid)
-        |SELECT doc_id, source, n_chars FROM w
-        |WHERE NOT EXISTS (SELECT 1 FROM seen WHERE seen.text = w.text)
-        |ORDER BY doc_id""".stripMargin,
-
-    // semi = DISTINCT matched left rows; no cutoff term (unlike s8) —
-    // matched rows emit on arrival, unmatched rows never emit
-    "s11_stream_semi_join" ->
-      """SELECT DISTINCT c.user_id, c.event_id AS click_id, c.ts AS click_ts
-        |FROM events c JOIN events p
-        |  ON c.user_id = p.user_id
-        | AND c.event_type = 'click' AND p.event_type = 'purchase'
-        | AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
-        |ORDER BY 1, 2""".stripMargin,
-
-    "s5_stream_join" ->
-      """SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
-        |  c.ts AS click_ts, p.ts AS purchase_ts
-        |FROM events c JOIN events p
-        |  ON c.user_id = p.user_id
-        | AND c.event_type = 'click' AND p.event_type = 'purchase'
-        | AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
-        |ORDER BY c.user_id, click_id, purchase_id""".stripMargin,
-
-    // the final watermark is min(max click_ts, max purchase_ts) - 2 h
-    // (Spark's multi-input watermark policy is min); an unmatched click
-    // emits its null row only if click_ts + 1 h < that watermark.
-    // The STRICT < pins Spark's observed eviction boundary: a click
-    // whose match horizon lands EXACTLY on the final watermark keeps
-    // its state (no null row) — StreamingSpec ("outer-join null row…")
-    // locks that tie case with a synthetic fixture, so a fixture
-    // regeneration that lands a click on the boundary cannot silently
-    // flip this oracle's <.
-    // Spark sorts NULL first — DuckDB defaults NULLS LAST, so pin it.
-    "s8_stream_outer_join" ->
-      """WITH wm AS (
-        |  SELECT least(
-        |    (SELECT max(ts) FROM events WHERE event_type = 'click'),
-        |    (SELECT max(ts) FROM events WHERE event_type = 'purchase'))
-        |    - INTERVAL 2 HOUR AS w),
-        |matched AS (
-        |  SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
-        |         c.ts AS click_ts, p.ts AS purchase_ts
-        |  FROM events c JOIN events p
-        |    ON c.user_id = p.user_id
-        |   AND c.event_type = 'click' AND p.event_type = 'purchase'
-        |   AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR),
-        |unmatched AS (
-        |  SELECT c.user_id, c.event_id AS click_id, NULL::BIGINT AS purchase_id,
-        |         c.ts AS click_ts, NULL::TIMESTAMP AS purchase_ts
-        |  FROM events c CROSS JOIN wm
-        |  WHERE c.event_type = 'click'
-        |    AND c.ts + INTERVAL 1 HOUR < wm.w
-        |    AND NOT EXISTS (
-        |      SELECT 1 FROM events p
-        |      WHERE p.user_id = c.user_id AND p.event_type = 'purchase'
-        |        AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR))
-        |SELECT * FROM matched
-        |UNION ALL SELECT * FROM unmatched
-        |ORDER BY user_id, click_id, purchase_id NULLS FIRST""".stripMargin,
-
-    "s9_stream_tws" -> statefulOracle,
-    "s3_stream_stateful" -> statefulOracle,
-
-    // exact-serve contract: streamed-in codes + unbounded rerank ==
-    // brute-force kNN on the full table (same oracle as c6/c68)
-    "s13_stream_ann_ingest" -> LayerC.knnOracleSql,
-
-    // gaps-and-islands sessionization == Spark session_window on bounded
-    // input (new session when the gap is >= 30 min; Spark's window end is
-    // exclusive at start+gap)
-    "s2_stream_session" ->
-      """WITH d AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |s AS (
-        |  SELECT user_id, ts,
-        |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-        |                     ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM d)
-        |SELECT min(ts) AS session_start, user_id,
-        |       count(1) AS n_events, max(ts) AS last_ts
-        |FROM s GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin
   )
 }

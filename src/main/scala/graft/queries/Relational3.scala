@@ -1,23 +1,21 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import Query.t
 
 /** Layer B continuation #2: JSON struct round-trips, date arithmetic,
   * cast semantics, map functions, approximate distinct, vector-level
   * exact dedup. */
 object Relational3 {
-  type Q = (SparkSession, String) => DataFrame
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  val queries: Map[String, Q] = Map(
+  val declared: Seq[Query] = Seq(
 
     // from_json with explicit schema → struct field access + to_json
-    "q49_json_struct" -> { (s, dir) =>
+    Query("q49_json_struct", Oracle(
+      """SELECT event_id,
+        |  CAST(json_extract(props, '$.k') AS INTEGER) AS k,
+        |  json_object('t', event_type, 'u', user_id) AS j
+        |FROM events WHERE event_id < 500 ORDER BY event_id""".stripMargin)) { (s, dir) =>
       val schema = StructType(Seq(StructField("k", IntegerType)))
       t(s, dir, "events")
         .filter(col("event_id") < 500)
@@ -29,7 +27,14 @@ object Relational3 {
     },
 
     // date arithmetic: add_months, last_day, quarter, day-of-week family
-    "q50_date_arith" -> { (s, dir) =>
+    Query("q50_date_arith", Oracle(
+      """SELECT o_orderkey,
+        |  CAST(o_orderdate + INTERVAL 2 MONTH AS DATE) AS plus2m,
+        |  last_day(o_orderdate) AS month_end,
+        |  CAST(quarter(o_orderdate) AS INTEGER) AS q,
+        |  CAST(dayofweek(o_orderdate) + 1 AS INTEGER) AS dow,
+        |  CAST(weekofyear(o_orderdate) AS INTEGER) AS woy
+        |FROM orders WHERE o_orderkey <= 300 ORDER BY o_orderkey""".stripMargin)) { (s, dir) =>
       t(s, dir, "orders")
         .filter(col("o_orderkey") <= 300)
         .select(
@@ -44,7 +49,13 @@ object Relational3 {
 
     // cast semantics: double→int truncation, int→string, string→date,
     // double→decimal rounding
-    "q51_casts" -> { (s, dir) =>
+    Query("q51_casts", Oracle(
+      """SELECT p_partkey,
+        |  CAST(trunc(p_retailprice) AS INTEGER) AS price_int,
+        |  CAST(p_size AS VARCHAR) AS size_str,
+        |  CAST('1997-0' || CAST((p_partkey % 9) + 1 AS VARCHAR) || '-15' AS DATE) AS derived_date,
+        |  CAST(p_retailprice AS DECIMAL(12,1)) AS price_dec
+        |FROM part WHERE p_partkey <= 200 ORDER BY p_partkey""".stripMargin)) { (s, dir) =>
       t(s, dir, "part")
         .filter(col("p_partkey") <= 200)
         .select(
@@ -58,7 +69,13 @@ object Relational3 {
     },
 
     // map construction and access
-    "q52_maps" -> { (s, dir) =>
+    Query("q52_maps", Oracle(
+      """SELECT n_nationkey,
+        |  n_name AS name,
+        |  'name,region' AS ks,
+        |  CAST(json_object('name', n_name, 'region', CAST(n_regionkey AS VARCHAR)) AS VARCHAR) AS m_json,
+        |  CAST(2 AS INTEGER) AS m_size
+        |FROM nation ORDER BY n_nationkey""".stripMargin)) { (s, dir) =>
       t(s, dir, "nation")
         .select(
           col("n_nationkey"),
@@ -77,7 +94,7 @@ object Relational3 {
 
     // approximate distinct (HLL++) — rows-only: sketch estimates have no
     // DuckDB-equal value; accuracy asserted in ApproxSpec vs exact
-    "q53_approx_distinct" -> { (s, dir) =>
+    Query("q53_approx_distinct", RowsOnly) { (s, dir) =>
       t(s, dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(
@@ -88,7 +105,9 @@ object Relational3 {
 
     // exact dedup over an embedding column (vector-level): group by the
     // full vector, keep min id — the multimodal/embedding analog of c1
-    "q54_vector_dedup" -> { (s, dir) =>
+    Query("q54_vector_dedup", Oracle(
+      """SELECT min(vec_id) AS vec_id, count(1) AS n_copies
+        |FROM embeddings GROUP BY embedding ORDER BY vec_id""".stripMargin)) { (s, dir) =>
       t(s, dir, "embeddings")
         .groupBy("embedding")
         .agg(min(col("vec_id")).as("vec_id"), count(lit(1)).as("n_copies"))
@@ -97,7 +116,13 @@ object Relational3 {
     },
 
     // greatest/least + arithmetic edge semantics
-    "q55_greatest_least" -> { (s, dir) =>
+    Query("q55_greatest_least", Oracle(
+      """SELECT l_orderkey, l_linenumber,
+        |  greatest(l_quantity, l_discount * 100) AS g,
+        |  least(l_tax, l_discount) AS l,
+        |  l_extendedprice * (1 - l_discount) * (1 + l_tax) AS charged
+        |FROM lineitem WHERE l_orderkey <= 100
+        |ORDER BY l_orderkey, l_linenumber, charged, g, l""".stripMargin)) { (s, dir) =>
       t(s, dir, "lineitem")
         .filter(col("l_orderkey") <= 100)
         .select(
@@ -110,50 +135,5 @@ object Relational3 {
         // the computed columns so the row-ordered compare is stable
         .orderBy("l_orderkey", "l_linenumber", "charged", "g", "l")
     }
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q49_json_struct" ->
-      """SELECT event_id,
-        |  CAST(json_extract(props, '$.k') AS INTEGER) AS k,
-        |  json_object('t', event_type, 'u', user_id) AS j
-        |FROM events WHERE event_id < 500 ORDER BY event_id""".stripMargin,
-
-    "q50_date_arith" ->
-      """SELECT o_orderkey,
-        |  CAST(o_orderdate + INTERVAL 2 MONTH AS DATE) AS plus2m,
-        |  last_day(o_orderdate) AS month_end,
-        |  CAST(quarter(o_orderdate) AS INTEGER) AS q,
-        |  CAST(dayofweek(o_orderdate) + 1 AS INTEGER) AS dow,
-        |  CAST(weekofyear(o_orderdate) AS INTEGER) AS woy
-        |FROM orders WHERE o_orderkey <= 300 ORDER BY o_orderkey""".stripMargin,
-
-    "q51_casts" ->
-      """SELECT p_partkey,
-        |  CAST(trunc(p_retailprice) AS INTEGER) AS price_int,
-        |  CAST(p_size AS VARCHAR) AS size_str,
-        |  CAST('1997-0' || CAST((p_partkey % 9) + 1 AS VARCHAR) || '-15' AS DATE) AS derived_date,
-        |  CAST(p_retailprice AS DECIMAL(12,1)) AS price_dec
-        |FROM part WHERE p_partkey <= 200 ORDER BY p_partkey""".stripMargin,
-
-    "q52_maps" ->
-      """SELECT n_nationkey,
-        |  n_name AS name,
-        |  'name,region' AS ks,
-        |  CAST(json_object('name', n_name, 'region', CAST(n_regionkey AS VARCHAR)) AS VARCHAR) AS m_json,
-        |  CAST(2 AS INTEGER) AS m_size
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-
-    "q54_vector_dedup" ->
-      """SELECT min(vec_id) AS vec_id, count(1) AS n_copies
-        |FROM embeddings GROUP BY embedding ORDER BY vec_id""".stripMargin,
-
-    "q55_greatest_least" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  greatest(l_quantity, l_discount * 100) AS g,
-        |  least(l_tax, l_discount) AS l,
-        |  l_extendedprice * (1 - l_discount) * (1 + l_tax) AS charged
-        |FROM lineitem WHERE l_orderkey <= 100
-        |ORDER BY l_orderkey, l_linenumber, charged, g, l""".stripMargin
   )
 }

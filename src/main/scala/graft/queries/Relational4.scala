@@ -1,22 +1,35 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import Query.t
 
 /** Layer B continuation #3: HAVING, LIMIT/OFFSET pagination, set-op type
   * coercion, interval arithmetic, ordered string aggregation. */
 object Relational4 {
-  type Q = (SparkSession, String) => DataFrame
+  // shared with Extended's s7: the streamed sliding window must equal q70
+  private[queries] val slidingWindowSql: String =
+    """SELECT ws AS window_start, event_type, count(1) AS n
+      |FROM (
+      |  SELECT event_type, ts,
+      |    time_bucket(INTERVAL '30 minutes', ts) - k * INTERVAL '30 minutes' AS ws
+      |  FROM events, LATERAL (SELECT unnest([0, 1]) AS k) u) t
+      |WHERE ts >= ws AND ts < ws + INTERVAL '1 hour'
+      |GROUP BY ws, event_type
+      |ORDER BY window_start, event_type""".stripMargin
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  val queries: Map[String, Q] = Map(
+  val declared: Seq[Query] = Seq(
 
     // UNPIVOT (wide → long reshape): four metric columns melt into
     // (metric, value) rows — a narrow per-row generator, no shuffle
-    "q71_unpivot" -> { (s, dir) =>
+    Query("q71_unpivot", Oracle(
+      """SELECT l_orderkey, l_linenumber, m.metric, m.value
+        |FROM lineitem,
+        |  LATERAL (VALUES ('l_quantity', l_quantity),
+        |                  ('l_extendedprice', l_extendedprice),
+        |                  ('l_discount', l_discount),
+        |                  ('l_tax', l_tax)) AS m(metric, value)
+        |WHERE l_orderkey <= 100
+        |ORDER BY l_orderkey, l_linenumber, metric, value""".stripMargin)) { (s, dir) =>
       t(s, dir, "lineitem")
         .filter(col("l_orderkey") <= 100)
         .select("l_orderkey", "l_linenumber", "l_quantity",
@@ -32,7 +45,10 @@ object Relational4 {
     },
 
     // GROUP BY ... HAVING over an aggregate predicate
-    "q57_having" -> { (s, dir) =>
+    Query("q57_having", Oracle(
+      """SELECT l_suppkey, count(1) AS n_lines
+        |FROM lineitem GROUP BY l_suppkey
+        |HAVING count(1) > 650 ORDER BY l_suppkey""".stripMargin)) { (s, dir) =>
       t(s, dir, "lineitem")
         .groupBy("l_suppkey")
         .agg(count(lit(1)).as("n_lines"))
@@ -41,7 +57,10 @@ object Relational4 {
     },
 
     // LIMIT + OFFSET pagination over a total order
-    "q58_limit_offset" -> { (s, dir) =>
+    Query("q58_limit_offset", Oracle(
+      """SELECT o_orderkey, o_totalprice FROM orders
+        |ORDER BY o_totalprice DESC, o_orderkey ASC
+        |LIMIT 15 OFFSET 10""".stripMargin)) { (s, dir) =>
       t(s, dir, "orders")
         .select("o_orderkey", "o_totalprice")
         .orderBy(desc("o_totalprice"), asc("o_orderkey"))
@@ -49,7 +68,10 @@ object Relational4 {
     },
 
     // UNION type coercion: int column unioned with double → double
-    "q59_union_coercion" -> { (s, dir) =>
+    Query("q59_union_coercion", Oracle(
+      """SELECT count(1) AS n, round(min(x), 6) AS min_x, round(max(x), 6) AS max_x
+        |FROM (SELECT CAST(p_size AS DOUBLE) AS x FROM part
+        |      UNION ALL SELECT p_retailprice FROM part) u""".stripMargin)) { (s, dir) =>
       val ints = t(s, dir, "part").select(col("p_size").cast("int").as("x"))
       val dbls = t(s, dir, "part").select(col("p_retailprice").as("x"))
       ints.union(dbls)
@@ -58,7 +80,13 @@ object Relational4 {
     },
 
     // interval arithmetic in predicates and projections
-    "q60_interval_arith" -> { (s, dir) =>
+    Query("q60_interval_arith", Oracle(
+      """SELECT o_orderkey,
+        |  o_orderdate + INTERVAL 90 DAY AS due_date,
+        |  o_orderdate - INTERVAL 1 HOUR AS hour_before
+        |FROM orders
+        |WHERE o_orderdate + INTERVAL 30 DAY < TIMESTAMP '1995-06-01'
+        |ORDER BY o_orderkey""".stripMargin)) { (s, dir) =>
       t(s, dir, "orders")
         .filter(col("o_orderdate") + expr("INTERVAL 30 DAYS") < lit("1995-06-01").cast("timestamp"))
         .select(
@@ -69,7 +97,11 @@ object Relational4 {
     },
 
     // ordered string aggregation (listagg shape): deterministic via sort
-    "q61_string_agg" -> { (s, dir) =>
+    Query("q61_string_agg", Oracle(
+      """SELECT n_regionkey,
+        |  string_agg(n_name, ',' ORDER BY n_name) AS nations,
+        |  count(1) AS n
+        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin)) { (s, dir) =>
       t(s, dir, "nation")
         .groupBy("n_regionkey")
         .agg(array_join(array_sort(collect_list(col("n_name"))), ",").as("nations"),
@@ -78,7 +110,10 @@ object Relational4 {
     },
 
     // nested struct aggregation: per-region list of (name, key) structs
-    "q62_struct_agg" -> { (s, dir) =>
+    Query("q62_struct_agg", Oracle(
+      """SELECT n_regionkey,
+        |  CAST(to_json(list_sort(list({'name': n_name, 'key': n_nationkey}))) AS VARCHAR) AS members
+        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin)) { (s, dir) =>
       t(s, dir, "nation")
         .groupBy("n_regionkey")
         .agg(sort_array(collect_list(struct(col("n_name").as("name"),
@@ -89,7 +124,16 @@ object Relational4 {
     },
 
     // window distribution functions + lag/lead navigation
-    "q64_window_dist" -> { (s, dir) =>
+    Query("q64_window_dist", Oracle(
+      """SELECT o_orderkey, o_orderstatus, o_totalprice,
+        |  round(percent_rank() OVER w, 6) AS pr,
+        |  round(cume_dist() OVER w, 6) AS cd,
+        |  lag(o_totalprice, 1) OVER w AS prev_price,
+        |  lead(o_totalprice, 1) OVER w AS next_price
+        |FROM orders WHERE o_orderkey <= 2000
+        |WINDOW w AS (PARTITION BY o_orderstatus
+        |             ORDER BY o_totalprice, o_orderkey)
+        |ORDER BY o_orderstatus, o_totalprice, o_orderkey""".stripMargin)) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("o_orderstatus")
         .orderBy(col("o_totalprice"), col("o_orderkey"))
@@ -105,7 +149,15 @@ object Relational4 {
     },
 
     // lateral explode with ordinality (posexplode) + post-explode filter
-    "q65_lateral_explode" -> { (s, dir) =>
+    Query("q65_lateral_explode", Oracle(
+      """WITH w AS (SELECT p_partkey, string_split(p_name, ' ') AS ws
+        |           FROM part WHERE p_partkey <= 200),
+        |e AS (
+        |  SELECT p_partkey, CAST(i AS INTEGER) AS pos, ws[i + 1] AS word
+        |  FROM w, LATERAL (SELECT unnest(range(len(ws))) AS i) u)
+        |SELECT p_partkey, pos, word FROM e
+        |WHERE length(word) > 3
+        |ORDER BY p_partkey, pos""".stripMargin)) { (s, dir) =>
       t(s, dir, "part")
         .filter(col("p_partkey") <= 200)
         .select(col("p_partkey"),
@@ -115,7 +167,14 @@ object Relational4 {
     },
 
     // width_bucket equi-width histogram of order totals
-    "q66_width_bucket" -> { (s, dir) =>
+    // DuckDB 1.0 has no width_bucket — replicate Spark's semantics:
+    // floor((v - lo)/width) + 1, clamped to 0 below lo and n+1 above hi
+    Query("q66_width_bucket", Oracle(
+      """SELECT CAST(CASE WHEN o_totalprice < 0 THEN 0
+        |                 WHEN o_totalprice >= 600000 THEN 13
+        |                 ELSE floor(o_totalprice / 50000.0) + 1 END AS BIGINT) AS bucket,
+        |  count(1) AS n
+        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin)) { (s, dir) =>
       t(s, dir, "orders")
         .select(width_bucket(col("o_totalprice"), lit(0.0), lit(600000.0), lit(12))
           .as("bucket"))
@@ -126,7 +185,14 @@ object Relational4 {
 
     // try_* error-safe arithmetic/casts: ANSI mode makes 1/0 and bad
     // casts THROW; the try_ variants degrade to NULL instead
-    "q68_try_funcs" -> { (s, dir) =>
+    Query("q68_try_funcs", Oracle(
+      """SELECT l_orderkey, l_linenumber,
+        |  CAST(NULL AS DOUBLE) AS div_by_zero,
+        |  l_extendedprice / l_quantity AS unit_price,
+        |  TRY_CAST(l_returnflag AS DECIMAL(3,0)) AS flag_as_number,
+        |  CAST(NULL AS BIGINT) AS overflow_add
+        |FROM lineitem WHERE l_orderkey <= 200
+        |ORDER BY l_orderkey, l_linenumber, unit_price""".stripMargin)) { (s, dir) =>
       t(s, dir, "lineitem")
         .filter(col("l_orderkey") <= 200)
         .select(
@@ -145,99 +211,7 @@ object Relational4 {
 
     // batch sessionization (gaps-and-islands) — the batch counterpart
     // of the streaming session_window (s2), for backfills
-    "q69_sessionize" -> { (s, dir) =>
-      graft.operators.Sessionize.sessionStats(
-          t(s, dir, "events"), "user_id", "ts", gapSeconds = 1800)
-        .orderBy("user_id", "session_seq")
-    },
-
-    // sliding (overlapping) time windows: 1 h windows every 30 min —
-    // each event lands in 2 windows (tumbling q35 / session s2 cover
-    // the other window kinds)
-    "q70_sliding_window" -> { (s, dir) =>
-      t(s, dir, "events")
-        .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").as("window_start"), col("event_type"), col("n"))
-        .orderBy("window_start", "event_type")
-    },
-
-    // upsert/merge: apply an "updates" changeset to a target keyed by
-    // o_orderkey — updated rows win, unmatched target rows survive,
-    // brand-new rows append (the ETL pattern the reference's INSERT-only
-    // loader cannot express; at scale this is the partition-overwrite /
-    // MERGE INTO shape)
-    "q63_upsert_merge" -> { (s, dir) =>
-      val target = t(s, dir, "orders").select("o_orderkey", "o_totalprice", "o_orderstatus")
-      val updates = t(s, dir, "orders")
-        .filter(col("o_orderkey") % 100 === 0)
-        .select(col("o_orderkey"),
-          (col("o_totalprice") * 1.1).as("o_totalprice"),
-          lit("U").as("o_orderstatus"))
-        .union(t(s, dir, "orders").agg((max("o_orderkey") + 1).as("o_orderkey"))
-          .select(col("o_orderkey"), lit(42.0).as("o_totalprice"), lit("N").as("o_orderstatus")))
-      target.join(updates, Seq("o_orderkey"), "left_anti")
-        .union(updates)
-        .orderBy("o_orderkey")
-    }
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q57_having" ->
-      """SELECT l_suppkey, count(1) AS n_lines
-        |FROM lineitem GROUP BY l_suppkey
-        |HAVING count(1) > 650 ORDER BY l_suppkey""".stripMargin,
-
-    "q58_limit_offset" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey ASC
-        |LIMIT 15 OFFSET 10""".stripMargin,
-
-    "q59_union_coercion" ->
-      """SELECT count(1) AS n, round(min(x), 6) AS min_x, round(max(x), 6) AS max_x
-        |FROM (SELECT CAST(p_size AS DOUBLE) AS x FROM part
-        |      UNION ALL SELECT p_retailprice FROM part) u""".stripMargin,
-
-    "q60_interval_arith" ->
-      """SELECT o_orderkey,
-        |  o_orderdate + INTERVAL 90 DAY AS due_date,
-        |  o_orderdate - INTERVAL 1 HOUR AS hour_before
-        |FROM orders
-        |WHERE o_orderdate + INTERVAL 30 DAY < TIMESTAMP '1995-06-01'
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q61_string_agg" ->
-      """SELECT n_regionkey,
-        |  string_agg(n_name, ',' ORDER BY n_name) AS nations,
-        |  count(1) AS n
-        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
-
-    "q62_struct_agg" ->
-      """SELECT n_regionkey,
-        |  CAST(to_json(list_sort(list({'name': n_name, 'key': n_nationkey}))) AS VARCHAR) AS members
-        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
-
-    "q70_sliding_window" ->
-      """SELECT ws AS window_start, event_type, count(1) AS n
-        |FROM (
-        |  SELECT event_type, ts,
-        |    time_bucket(INTERVAL '30 minutes', ts) - k * INTERVAL '30 minutes' AS ws
-        |  FROM events, LATERAL (SELECT unnest([0, 1]) AS k) u) t
-        |WHERE ts >= ws AND ts < ws + INTERVAL '1 hour'
-        |GROUP BY ws, event_type
-        |ORDER BY window_start, event_type""".stripMargin,
-
-    "q71_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, m.metric, m.value
-        |FROM lineitem,
-        |  LATERAL (VALUES ('l_quantity', l_quantity),
-        |                  ('l_extendedprice', l_extendedprice),
-        |                  ('l_discount', l_discount),
-        |                  ('l_tax', l_tax)) AS m(metric, value)
-        |WHERE l_orderkey <= 100
-        |ORDER BY l_orderkey, l_linenumber, metric, value""".stripMargin,
-
-    "q69_sessionize" ->
+    Query("q69_sessionize", Oracle(
       """WITH d AS (
         |  SELECT user_id, ts,
         |    CASE WHEN lag(ts) OVER w IS NULL
@@ -253,48 +227,29 @@ object Relational4 {
         |SELECT user_id, session_seq, min(ts) AS session_start,
         |       max(ts) AS last_ts, count(1) AS n_events
         |FROM s GROUP BY user_id, session_seq
-        |ORDER BY user_id, session_seq""".stripMargin,
+        |ORDER BY user_id, session_seq""".stripMargin)) { (s, dir) =>
+      graft.operators.Sessionize.sessionStats(
+          t(s, dir, "events"), "user_id", "ts", gapSeconds = 1800)
+        .orderBy("user_id", "session_seq")
+    },
 
-    "q68_try_funcs" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(NULL AS DOUBLE) AS div_by_zero,
-        |  l_extendedprice / l_quantity AS unit_price,
-        |  TRY_CAST(l_returnflag AS DECIMAL(3,0)) AS flag_as_number,
-        |  CAST(NULL AS BIGINT) AS overflow_add
-        |FROM lineitem WHERE l_orderkey <= 200
-        |ORDER BY l_orderkey, l_linenumber, unit_price""".stripMargin,
+    // sliding (overlapping) time windows: 1 h windows every 30 min —
+    // each event lands in 2 windows (tumbling q35 / session s2 cover
+    // the other window kinds)
+    Query("q70_sliding_window", Oracle(slidingWindowSql)) { (s, dir) =>
+      t(s, dir, "events")
+        .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .select(col("window.start").as("window_start"), col("event_type"), col("n"))
+        .orderBy("window_start", "event_type")
+    },
 
-    "q64_window_dist" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice,
-        |  round(percent_rank() OVER w, 6) AS pr,
-        |  round(cume_dist() OVER w, 6) AS cd,
-        |  lag(o_totalprice, 1) OVER w AS prev_price,
-        |  lead(o_totalprice, 1) OVER w AS next_price
-        |FROM orders WHERE o_orderkey <= 2000
-        |WINDOW w AS (PARTITION BY o_orderstatus
-        |             ORDER BY o_totalprice, o_orderkey)
-        |ORDER BY o_orderstatus, o_totalprice, o_orderkey""".stripMargin,
-
-    "q65_lateral_explode" ->
-      """WITH w AS (SELECT p_partkey, string_split(p_name, ' ') AS ws
-        |           FROM part WHERE p_partkey <= 200),
-        |e AS (
-        |  SELECT p_partkey, CAST(i AS INTEGER) AS pos, ws[i + 1] AS word
-        |  FROM w, LATERAL (SELECT unnest(range(len(ws))) AS i) u)
-        |SELECT p_partkey, pos, word FROM e
-        |WHERE length(word) > 3
-        |ORDER BY p_partkey, pos""".stripMargin,
-
-    // DuckDB 1.0 has no width_bucket — replicate Spark's semantics:
-    // floor((v - lo)/width) + 1, clamped to 0 below lo and n+1 above hi
-    "q66_width_bucket" ->
-      """SELECT CAST(CASE WHEN o_totalprice < 0 THEN 0
-        |                 WHEN o_totalprice >= 600000 THEN 13
-        |                 ELSE floor(o_totalprice / 50000.0) + 1 END AS BIGINT) AS bucket,
-        |  count(1) AS n
-        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-    "q63_upsert_merge" ->
+    // upsert/merge: apply an "updates" changeset to a target keyed by
+    // o_orderkey — updated rows win, unmatched target rows survive,
+    // brand-new rows append (the ETL pattern the reference's INSERT-only
+    // loader cannot express; at scale this is the partition-overwrite /
+    // MERGE INTO shape)
+    Query("q63_upsert_merge", Oracle(
       """WITH updates AS (
         |  SELECT o_orderkey, o_totalprice * 1.1 AS o_totalprice, 'U' AS o_orderstatus
         |  FROM orders WHERE o_orderkey % 100 = 0
@@ -304,6 +259,18 @@ object Relational4 {
         |  SELECT t.o_orderkey, t.o_totalprice, t.o_orderstatus
         |  FROM orders t ANTI JOIN updates u USING (o_orderkey)
         |  UNION ALL SELECT * FROM updates) m
-        |ORDER BY o_orderkey""".stripMargin
+        |ORDER BY o_orderkey""".stripMargin)) { (s, dir) =>
+      val target = t(s, dir, "orders").select("o_orderkey", "o_totalprice", "o_orderstatus")
+      val updates = t(s, dir, "orders")
+        .filter(col("o_orderkey") % 100 === 0)
+        .select(col("o_orderkey"),
+          (col("o_totalprice") * 1.1).as("o_totalprice"),
+          lit("U").as("o_orderstatus"))
+        .union(t(s, dir, "orders").agg((max("o_orderkey") + 1).as("o_orderkey"))
+          .select(col("o_orderkey"), lit(42.0).as("o_totalprice"), lit("N").as("o_orderstatus")))
+      target.join(updates, Seq("o_orderkey"), "left_anti")
+        .union(updates)
+        .orderBy("o_orderkey")
+    }
   )
 }

@@ -1,8 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.Tables
+import Query.t
 
 /** Round-7 SQL-surface additions.
   *
@@ -15,11 +15,6 @@ import graft.Tables
   * for count-distinct (`q53_approx_distinct` + ApproxSpec).
   */
 object Relational6 {
-  type Q = (SparkSession, String) => DataFrame
-
-  private def t(s: SparkSession, dir: String, name: String) =
-    Tables.load(s, dir, name)
-
   /** CDC snapshot-diff classification (the EXTRACT side of CDC; q63's
     * upsert-merge is the APPLY side): full-outer join `prev` and `curr`
     * on `key`, classify each row, drop the unchanged. Side PRESENCE
@@ -48,7 +43,7 @@ object Relational6 {
       .filter(col("change_type").isNotNull)
       .select(key, "change_type", oldCol, newCol)
 
-  val queries: Map[String, Q] = Map(
+  val declared: Seq[Query] = Seq(
 
     // approximate percentiles at production accuracy — rows-only: the
     // sketch's picked elements have no DuckDB-equal value; the rank
@@ -76,7 +71,30 @@ object Relational6 {
     // immediately; at 100 TB with wide rows, compare an xxhash64 digest
     // of the payload columns instead of column-by-column equality —
     // same plan, 8-byte compare
-    "q109_snapshot_diff" -> { (s, dir) =>
+    // identical modular slices + identical planted drift (+1.5 is one
+    // IEEE add on both engines); the unchanged class filtered by the
+    // same inequality
+    // the CDC diff is a full outer join, the same class as q7: its
+    // shuffle join is the correct shape, not a size question
+    Query("q109_snapshot_diff", Oracle(
+      """WITH o AS (SELECT o_orderkey, o_totalprice FROM orders),
+        |prev AS (
+        |  SELECT o_orderkey, o_totalprice AS old_price FROM o
+        |  WHERE o_orderkey % 7 <> 0),
+        |curr AS (
+        |  SELECT o_orderkey,
+        |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice + 1.5
+        |         ELSE o_totalprice END AS new_price
+        |  FROM o WHERE o_orderkey % 5 <> 0)
+        |SELECT coalesce(prev.o_orderkey, curr.o_orderkey) AS o_orderkey,
+        |  CASE WHEN prev.o_orderkey IS NULL THEN 'insert'
+        |       WHEN curr.o_orderkey IS NULL THEN 'delete'
+        |       WHEN old_price <> new_price THEN 'update' END AS change_type,
+        |  old_price, new_price
+        |FROM prev FULL OUTER JOIN curr ON prev.o_orderkey = curr.o_orderkey
+        |WHERE prev.o_orderkey IS NULL OR curr.o_orderkey IS NULL
+        |   OR old_price <> new_price
+        |ORDER BY o_orderkey""".stripMargin), allow = Some(PlanAllowance.SortMergeJoin)) { (s, dir) =>
       val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
       val prev = o.filter(col("o_orderkey") % 7 =!= 0)
         .select(col("o_orderkey"), col("o_totalprice").as("old_price"))
@@ -93,7 +111,16 @@ object Relational6 {
     // row_number cuts arbitrarily through a tie — the correct "latest
     // 3 order DATES per status" semantics when dates repeat. Same
     // one-exchange per-group window shape as q11
-    "q110_topk_ties" -> { (s, dir) =>
+    // rank() semantics are identical; the boundary ties survive on both
+    Query("q110_topk_ties", Oracle(
+      """SELECT o_orderstatus, rk, o_orderdate, o_orderkey, o_totalprice
+        |FROM (
+        |  SELECT o_orderkey, o_orderstatus, o_orderdate, o_totalprice,
+        |    rank() OVER (PARTITION BY o_orderstatus
+        |      ORDER BY o_orderdate DESC) AS rk
+        |  FROM orders)
+        |WHERE rk <= 3
+        |ORDER BY o_orderstatus, rk, o_orderkey""".stripMargin)) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("o_orderstatus")
         .orderBy(col("o_orderdate").desc)
@@ -113,7 +140,10 @@ object Relational6 {
     // for the file format; graft.functions.AvroWire rebuilds the wire
     // tier on it). The oracle is the plain projection: a correct codec
     // is EXACTLY the identity on these rows, doubles bit-for-bit
-    "q115_avro_wire" -> { (s, dir) =>
+    // the codec must be the identity — the oracle never sees Avro
+    Query("q115_avro_wire", Oracle(
+      """SELECT o_orderkey, o_orderstatus, o_totalprice
+        |FROM orders ORDER BY o_orderkey""".stripMargin)) { (s, dir) =>
       import graft.functions.AvroWire.{avroSchemaFor, from_avro_wire, to_avro_wire}
       val o = t(s, dir, "orders")
       val payload = struct(col("o_orderkey"), col("o_orderstatus"),
@@ -135,7 +165,30 @@ object Relational6 {
     // deterministic on both engines (the q103 tie discipline; array
     // comparison is lexicographic in both, and orderkey is exact in
     // double far beyond this fixture)
-    "q114_max_by" -> { (s, dir) =>
+    // DuckDB 1.0's arg_max takes only scalar ordering values, so the
+    // oracle states the argmax definition directly via window ranking
+    // (the q103 derivation pattern), with the identical (price, key)
+    // lexicographic tie order
+    Query("q114_max_by", Oracle(
+      """WITH r AS (
+        |  SELECT o_orderstatus, o_orderkey,
+        |    row_number() OVER (PARTITION BY o_orderstatus
+        |      ORDER BY o_totalprice DESC, o_orderkey DESC) AS rmax,
+        |    row_number() OVER (PARTITION BY o_orderstatus
+        |      ORDER BY o_totalprice ASC, o_orderkey ASC) AS rmin
+        |  FROM orders),
+        |s AS (
+        |  SELECT o_orderstatus, round(max(o_totalprice), 2) AS max_price,
+        |    count(1) AS n
+        |  FROM orders GROUP BY 1)
+        |SELECT s.o_orderstatus, mx.o_orderkey AS best_order,
+        |  mn.o_orderkey AS worst_order, s.max_price, s.n
+        |FROM s
+        |JOIN (SELECT o_orderstatus, o_orderkey FROM r WHERE rmax = 1) mx
+        |  USING (o_orderstatus)
+        |JOIN (SELECT o_orderstatus, o_orderkey FROM r WHERE rmin = 1) mn
+        |  USING (o_orderstatus)
+        |ORDER BY o_orderstatus""".stripMargin)) { (s, dir) =>
       val ordv = array(col("o_totalprice"), col("o_orderkey").cast("double"))
       t(s, dir, "orders")
         .groupBy("o_orderstatus")
@@ -153,7 +206,16 @@ object Relational6 {
     // calendar-interval variant over a timestamp ordering). Windows
     // partition by user — nothing global-sorts; equal-ts rows share a
     // frame by RANGE semantics, so the result is tie-deterministic
-    "q113_time_range_frame" -> { (s, dir) =>
+    // identical WINDOW clause — both engines implement the ANSI
+    // calendar-interval RANGE frame
+    Query("q113_time_range_frame", Oracle(
+      """SELECT event_id, user_id, ts,
+        |  count(1) OVER w AS n_1h,
+        |  round(sum(value) OVER w, 6) AS sum_1h
+        |FROM events
+        |WINDOW w AS (PARTITION BY user_id ORDER BY ts
+        |  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
+        |ORDER BY event_id""".stripMargin)) { (s, dir) =>
       t(s, dir, "events").createOrReplaceTempView("events_rf")
       // rounded because windowed double SUM associativity differs
       // between engines (the s3 precedent: DuckDB sums pairwise)
@@ -174,7 +236,19 @@ object Relational6 {
     // an equi-join to the planner (one hash exchange, broadcastable) —
     // NOT the non-equi BNLJ a naive `k = k OR (k IS NULL AND ...)`
     // rewrite degenerates to
-    "q112_null_safe_join" -> { (s, dir) =>
+    // IS NOT DISTINCT FROM is DuckDB's spelling of Spark's <=>
+    Query("q112_null_safe_join", Oracle(
+      """WITH lhs AS (
+        |  SELECT o_orderkey, nullif(o_orderpriority, '3-MEDIUM') AS prio_n,
+        |    o_totalprice
+        |  FROM orders),
+        |dim AS (
+        |  SELECT prio_n AS dim_prio,
+        |    coalesce(prio_n, '(suppressed)') AS label
+        |  FROM (SELECT DISTINCT prio_n FROM lhs))
+        |SELECT label, count(1) AS n, round(sum(o_totalprice), 2) AS revenue
+        |FROM lhs JOIN dim ON lhs.prio_n IS NOT DISTINCT FROM dim.dim_prio
+        |GROUP BY label ORDER BY label""".stripMargin)) { (s, dir) =>
       val lhs = t(s, dir, "orders")
         .select(col("o_orderkey"),
           nullif(col("o_orderpriority"), lit("3-MEDIUM")).as("prio_n"),
@@ -194,7 +268,22 @@ object Relational6 {
     // value whose cume_dist ≥ p), which matters when the column is a
     // code/price-point where an interpolated midpoint is meaningless.
     // WITHIN GROUP syntax exercises the Spark 4 SQL surface
-    "q111_percentile_disc" -> { (s, dir) =>
+    // the oracle states the ANSI definition directly — smallest value
+    // whose cume_dist reaches p — rather than trusting two engines'
+    // quantile_disc variants to share an indexing convention
+    Query("q111_percentile_disc", Oracle(
+      """WITH cd AS (
+        |  SELECT o_orderpriority, o_totalprice,
+        |    cume_dist() OVER (PARTITION BY o_orderpriority
+        |      ORDER BY o_totalprice) AS cd
+        |  FROM orders)
+        |SELECT o_orderpriority,
+        |  min(CASE WHEN cd >= 0.25 THEN o_totalprice END) AS p25_disc,
+        |  min(CASE WHEN cd >= 0.5  THEN o_totalprice END) AS p50_disc,
+        |  min(CASE WHEN cd >= 0.9  THEN o_totalprice END) AS p90_disc,
+        |  count(1) AS n
+        |FROM cd GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin)) { (s, dir) =>
       t(s, dir, "orders").createOrReplaceTempView("orders_pd")
       s.sql("""
         SELECT o_orderpriority,
@@ -205,7 +294,17 @@ object Relational6 {
         FROM orders_pd GROUP BY o_orderpriority ORDER BY o_orderpriority""")
     },
 
-    "q108_grouping_id" -> { (s, dir) =>
+    // DuckDB GROUPING with multiple args == Spark grouping_id bit vector
+    Query("q108_grouping_id", Oracle(
+      """SELECT l_returnflag, l_linestatus,
+        |  count(1) AS n,
+        |  CAST(GROUPING(l_returnflag) AS INTEGER) AS g_flag,
+        |  CAST(GROUPING(l_linestatus) AS INTEGER) AS g_status,
+        |  CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
+        |FROM lineitem
+        |GROUP BY ROLLUP (l_returnflag, l_linestatus)
+        |ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST"""
+        .stripMargin)) { (s, dir) =>
       t(s, dir, "lineitem")
         .rollup("l_returnflag", "l_linestatus")
         .agg(count(lit(1)).as("n"),
@@ -216,7 +315,22 @@ object Relational6 {
           asc_nulls_first("l_linestatus"))
     },
 
-    "q107_winsorize" -> { (s, dir) =>
+    // quantile_cont == Spark percentile (exact interpolated, q103
+    // precedent); the clip is least/greatest on identical doubles
+    Query("q107_winsorize", Oracle(
+      """WITH cuts AS (
+        |  SELECT l_returnflag,
+        |    quantile_cont(l_extendedprice, 0.05) AS p05,
+        |    quantile_cont(l_extendedprice, 0.95) AS p95
+        |  FROM lineitem GROUP BY l_returnflag)
+        |SELECT l.l_orderkey, l.l_linenumber, l.l_returnflag,
+        |  l.l_extendedprice,
+        |  round(least(greatest(l.l_extendedprice, c.p05), c.p95), 6)
+        |    AS winsorized,
+        |  (l.l_extendedprice < c.p05 OR l.l_extendedprice > c.p95)
+        |    AS clipped
+        |FROM lineitem l JOIN cuts c USING (l_returnflag)
+        |ORDER BY l.l_orderkey, l.l_linenumber""".stripMargin)) { (s, dir) =>
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           col("l_returnflag"), col("l_extendedprice"))
@@ -242,7 +356,39 @@ object Relational6 {
     // sums rounded to 6 BEFORE interpolating so both engines
     // interpolate from identical inputs, and the day-fraction is a
     // division of exact small ints
-    "q106_interpolate" -> { (s, dir) =>
+    // same op tree for the interpolation arithmetic (pv + (nv-pv)*frac,
+    // frac an exact int division) so the doubles agree bit-for-bit
+    Query("q106_interpolate", Oracle(
+      """WITH obs AS (
+        |  SELECT user_id, CAST(ts AS DATE) AS d, round(sum(value), 6) AS v
+        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
+        |sp AS (
+        |  SELECT user_id,
+        |    CAST(unnest(generate_series(min(d), max(d), INTERVAL 1 DAY)) AS DATE) AS d
+        |  FROM obs GROUP BY user_id),
+        |j AS (
+        |  SELECT sp.user_id, sp.d, o.v FROM sp
+        |  LEFT JOIN obs o ON o.user_id = sp.user_id AND o.d = sp.d),
+        |w AS (
+        |  SELECT user_id, d, v,
+        |    last_value(v IGNORE NULLS) OVER bk AS pv,
+        |    last_value(CASE WHEN v IS NOT NULL THEN d END IGNORE NULLS)
+        |      OVER bk AS pd,
+        |    first_value(v IGNORE NULLS) OVER fw AS nv,
+        |    first_value(CASE WHEN v IS NOT NULL THEN d END IGNORE NULLS)
+        |      OVER fw AS nd
+        |  FROM j
+        |  WINDOW bk AS (PARTITION BY user_id ORDER BY d
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+        |  fw AS (PARTITION BY user_id ORDER BY d
+        |    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
+        |SELECT user_id, d,
+        |  round(CASE WHEN v IS NOT NULL THEN v
+        |    ELSE pv + (nv - pv) *
+        |      (CAST(date_diff('day', pd, d) AS DOUBLE) /
+        |        date_diff('day', pd, nd)) END, 6) AS value,
+        |  (v IS NOT NULL) AS observed
+        |FROM w ORDER BY user_id, d""".stripMargin)) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val obs = t(s, dir, "events")
         .filter(col("event_type") === "purchase")
@@ -280,7 +426,20 @@ object Relational6 {
     // boundary prefix); the oracle states the dominance definition
     // directly as NOT EXISTS — O(n²), which is exactly why the engine
     // side doesn't compute it that way
-    "q105_skyline" -> { (s, dir) =>
+    // dominance stated directly: the O(n²) NOT EXISTS the engine side
+    // replaces with a partitioned scan
+    Query("q105_skyline", Oracle(
+      """WITH u AS (
+        |  SELECT o_orderkey, o_totalprice, o_orderdate FROM orders
+        |  WHERE o_orderpriority = '1-URGENT')
+        |SELECT o_orderkey, o_totalprice, o_orderdate FROM u o
+        |WHERE NOT EXISTS (
+        |  SELECT 1 FROM u o2
+        |  WHERE o2.o_totalprice >= o.o_totalprice
+        |    AND o2.o_orderdate <= o.o_orderdate
+        |    AND (o2.o_totalprice > o.o_totalprice
+        |         OR o2.o_orderdate < o.o_orderdate))
+        |ORDER BY o_orderkey""".stripMargin)) { (s, dir) =>
       val urgent = t(s, dir, "orders")
         .filter(col("o_orderpriority") === "1-URGENT")
         .select("o_orderkey", "o_totalprice", "o_orderdate")
@@ -291,7 +450,7 @@ object Relational6 {
     // one mergeable sketch per group computes all five cuts in a single
     // pass; the array expands to scalar columns because the comparison
     // harness can't sort array cells (the c38 flattening convention)
-    "q96_approx_percentiles" -> { (s, dir) =>
+    Query("q96_approx_percentiles", RowsOnly) { (s, dir) =>
       val acc = 100 // rank error ≤ 1/acc = 1% — the 100 TB setting
       t(s, dir, "orders")
         .groupBy("o_orderpriority")
@@ -316,7 +475,7 @@ object Relational6 {
     // cheap union of fixed-size sketches, never a re-scan of the data).
     // Rows-only: estimates have no DuckDB-equal value; ApproxSpec pins
     // the relative error vs exact count-distinct on the same data.
-    "q97_hll_union" -> { (s, dir) =>
+    Query("q97_hll_union", RowsOnly) { (s, dir) =>
       val lgK = 12 // 2^12 buckets — ~1.6% standard error, 4 KB sketches
       val perType = t(s, dir, "events")
         .groupBy("event_type")
@@ -338,7 +497,23 @@ object Relational6 {
     // GROUP BY month silently gets wrong (missing months vanish).
     // The spine derives from a 1-row broadcast aggregate + sequence()
     // — never a driver-side loop
-    "q98_date_spine" -> { (s, dir) =>
+    Query("q98_date_spine", Oracle(
+      """WITH o AS (SELECT * FROM orders WHERE o_totalprice > 490000),
+        |b AS (
+        |  SELECT date_trunc('month', min(o_orderdate)) AS lo,
+        |         date_trunc('month', max(o_orderdate)) AS hi
+        |  FROM o),
+        |spine AS (
+        |  SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 MONTH)) AS DATE) AS month
+        |  FROM b),
+        |m AS (
+        |  SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
+        |    round(sum(o_totalprice), 2) AS revenue, count(1) AS n_orders
+        |  FROM o GROUP BY 1)
+        |SELECT spine.month,
+        |  coalesce(m.revenue, 0.0) AS revenue,
+        |  coalesce(m.n_orders, 0) AS n_orders
+        |FROM spine LEFT JOIN m USING (month) ORDER BY month""".stripMargin)) { (s, dir) =>
       // big-ticket orders only — sparse enough that some months are
       // genuinely empty, so the fill is exercised, not vacuous
       val o = t(s, dir, "orders").filter(col("o_totalprice") > 490000)
@@ -364,7 +539,20 @@ object Relational6 {
     // constant within a run, and every window is PARTITIONED by user,
     // so nothing ever global-sorts: the classic streak shape that
     // scales as long as no single key's history is unbounded
-    "q99_streaks" -> { (s, dir) =>
+    // same island arithmetic on integer day numbers — no interval math
+    // to disagree on
+    Query("q99_streaks", Oracle(
+      """WITH d AS (
+        |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
+        |r AS (
+        |  SELECT user_id, d,
+        |    date_diff('day', DATE '1970-01-01', d) -
+        |      row_number() OVER (PARTITION BY user_id ORDER BY d) AS grp
+        |  FROM d)
+        |SELECT user_id, min(d) AS streak_start, max(d) AS streak_end,
+        |  count(1) AS streak_days
+        |FROM r GROUP BY user_id, grp
+        |ORDER BY user_id, streak_start""".stripMargin)) { (s, dir) =>
       val days = t(s, dir, "events")
         .select(col("user_id"), to_date(col("ts")).as("d"))
         .distinct()
@@ -388,7 +576,18 @@ object Relational6 {
     // The preserved rows are exactly what an audit query needs; null
     // ordering pinned explicitly because Spark defaults NULLS FIRST
     // where most engines default LAST
-    "q104_explode_outer" -> { (s, dir) =>
+    // unnest of a [NULL] placeholder emulates the outer explode
+    Query("q104_explode_outer", Oracle(
+      """WITH w AS (
+        |  SELECT doc_id,
+        |    list_filter(string_split_regex(lower(text), '\s+'),
+        |      x -> length(x) >= 8) AS ws
+        |  FROM documents)
+        |SELECT doc_id,
+        |  unnest(CASE WHEN len(ws) = 0 THEN [CAST(NULL AS VARCHAR)]
+        |         ELSE ws END) AS long_word
+        |FROM w
+        |ORDER BY doc_id, long_word NULLS FIRST""".stripMargin)) { (s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"),
           explode_outer(expr(
@@ -403,7 +602,25 @@ object Relational6 {
     // DERIVED: per-(group, value) counts ranked by (count desc, value
     // asc) — deterministic on both engines, and the count relation is
     // map-side combinable where a naive mode over raw rows is not
-    "q103_mode_median" -> { (s, dir) =>
+    // quantile_cont(0.5) is the same exact interpolated median Spark's
+    // median() computes; the mode derivation mirrors the Spark ranking
+    Query("q103_mode_median", Oracle(
+      """WITH c AS (
+        |  SELECT o_orderstatus, o_orderpriority, count(1) AS n
+        |  FROM orders GROUP BY 1, 2),
+        |m AS (
+        |  SELECT o_orderstatus, o_orderpriority AS mode_priority,
+        |    row_number() OVER (PARTITION BY o_orderstatus
+        |      ORDER BY n DESC, o_orderpriority) AS rk
+        |  FROM c),
+        |md AS (
+        |  SELECT o_orderstatus,
+        |    round(quantile_cont(o_totalprice, 0.5), 6) AS median_price
+        |  FROM orders GROUP BY 1)
+        |SELECT md.o_orderstatus AS o_orderstatus, md.median_price,
+        |  m.mode_priority
+        |FROM md JOIN m ON md.o_orderstatus = m.o_orderstatus AND m.rk = 1
+        |ORDER BY md.o_orderstatus""".stripMargin)) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val o = t(s, dir, "orders")
       val w = Window.partitionBy("o_orderstatus")
@@ -426,7 +643,16 @@ object Relational6 {
     // orders. Where q22's window idiom sorts every group completely,
     // this ships at most k rows per (group, map partition) into the
     // one hash exchange — the skew-proof shape at 100 TB
-    "q102_topk_per_group" -> { (s, dir) =>
+    // the bounded-heap operator must equal the classic window idiom
+    Query("q102_topk_per_group", Oracle(
+      """WITH r AS (
+        |  SELECT o_orderkey, o_custkey, o_totalprice,
+        |    row_number() OVER (PARTITION BY o_custkey
+        |      ORDER BY o_totalprice DESC, o_orderkey) AS rk
+        |  FROM orders)
+        |SELECT o_orderkey, o_custkey, o_totalprice
+        |FROM r WHERE rk <= 2
+        |ORDER BY o_custkey, o_orderkey""".stripMargin)) { (s, dir) =>
       graft.plans.TopKPerGroup.topKPerGroup(
           t(s, dir, "orders")
             .select("o_orderkey", "o_custkey", "o_totalprice"),
@@ -442,7 +668,24 @@ object Relational6 {
     // (b) a running frame for distinct-types-so-far. Every window is
     // PARTITIONED by user — nothing global-sorts, and the flag trick
     // costs one extra in-partition sort on the SAME user_id exchange
-    "q101_window_distinct" -> { (s, dir) =>
+    // the same first-occurrence derivation (DuckDB would also accept a
+    // native windowed COUNT(DISTINCT) for the total, but the flag form
+    // keeps both columns on one definition); BIGINT casts pin the
+    // HUGEINT window sums to Spark's long
+    Query("q101_window_distinct", Oracle(
+      """WITH f AS (
+        |  SELECT event_id, user_id, ts, event_type,
+        |    CASE WHEN row_number() OVER (
+        |      PARTITION BY user_id, event_type ORDER BY ts, event_id) = 1
+        |    THEN 1 ELSE 0 END AS fst
+        |  FROM events)
+        |SELECT event_id, user_id, ts, event_type,
+        |  CAST(sum(fst) OVER (PARTITION BY user_id) AS BIGINT)
+        |    AS n_types_total,
+        |  CAST(sum(fst) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+        |    AS n_types_so_far
+        |FROM f ORDER BY event_id""".stripMargin)) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val byFirst = Window.partitionBy("user_id", "event_type")
         .orderBy(col("ts"), col("event_id"))
@@ -464,288 +707,11 @@ object Relational6 {
     // in time, earlier or later, with the equal-distance tie resolved
     // backward — completes the as-of family (q36 back, q67 forward,
     // q95 tolerance) on the same one-shuffle union-window machinery
-    "q100_asof_nearest" -> { (s, dir) =>
-      val ev = t(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts", "value")
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts"), col("event_id").as("signup_id"),
-          col("value").as("signup_value"))
-      graft.operators.AsOfJoin.asofNearest(purchases, signups,
-          Seq("user_id"), "ts", "ts",
-          payloadCols = Seq("signup_value"), rightTieBreak = "signup_id")
-        .orderBy("event_id")
-    }
-  )
-
-  val oracle: Map[String, String] = Map(
-    // identical modular slices + identical planted drift (+1.5 is one
-    // IEEE add on both engines); the unchanged class filtered by the
-    // same inequality
-    "q109_snapshot_diff" ->
-      """WITH o AS (SELECT o_orderkey, o_totalprice FROM orders),
-        |prev AS (
-        |  SELECT o_orderkey, o_totalprice AS old_price FROM o
-        |  WHERE o_orderkey % 7 <> 0),
-        |curr AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice + 1.5
-        |         ELSE o_totalprice END AS new_price
-        |  FROM o WHERE o_orderkey % 5 <> 0)
-        |SELECT coalesce(prev.o_orderkey, curr.o_orderkey) AS o_orderkey,
-        |  CASE WHEN prev.o_orderkey IS NULL THEN 'insert'
-        |       WHEN curr.o_orderkey IS NULL THEN 'delete'
-        |       WHEN old_price <> new_price THEN 'update' END AS change_type,
-        |  old_price, new_price
-        |FROM prev FULL OUTER JOIN curr ON prev.o_orderkey = curr.o_orderkey
-        |WHERE prev.o_orderkey IS NULL OR curr.o_orderkey IS NULL
-        |   OR old_price <> new_price
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // the codec must be the identity — the oracle never sees Avro
-    "q115_avro_wire" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    // DuckDB 1.0's arg_max takes only scalar ordering values, so the
-    // oracle states the argmax definition directly via window ranking
-    // (the q103 derivation pattern), with the identical (price, key)
-    // lexicographic tie order
-    "q114_max_by" ->
-      """WITH r AS (
-        |  SELECT o_orderstatus, o_orderkey,
-        |    row_number() OVER (PARTITION BY o_orderstatus
-        |      ORDER BY o_totalprice DESC, o_orderkey DESC) AS rmax,
-        |    row_number() OVER (PARTITION BY o_orderstatus
-        |      ORDER BY o_totalprice ASC, o_orderkey ASC) AS rmin
-        |  FROM orders),
-        |s AS (
-        |  SELECT o_orderstatus, round(max(o_totalprice), 2) AS max_price,
-        |    count(1) AS n
-        |  FROM orders GROUP BY 1)
-        |SELECT s.o_orderstatus, mx.o_orderkey AS best_order,
-        |  mn.o_orderkey AS worst_order, s.max_price, s.n
-        |FROM s
-        |JOIN (SELECT o_orderstatus, o_orderkey FROM r WHERE rmax = 1) mx
-        |  USING (o_orderstatus)
-        |JOIN (SELECT o_orderstatus, o_orderkey FROM r WHERE rmin = 1) mn
-        |  USING (o_orderstatus)
-        |ORDER BY o_orderstatus""".stripMargin,
-
-    // identical WINDOW clause — both engines implement the ANSI
-    // calendar-interval RANGE frame
-    "q113_time_range_frame" ->
-      """SELECT event_id, user_id, ts,
-        |  count(1) OVER w AS n_1h,
-        |  round(sum(value) OVER w, 6) AS sum_1h
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts
-        |  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-
-    // IS NOT DISTINCT FROM is DuckDB's spelling of Spark's <=>
-    "q112_null_safe_join" ->
-      """WITH lhs AS (
-        |  SELECT o_orderkey, nullif(o_orderpriority, '3-MEDIUM') AS prio_n,
-        |    o_totalprice
-        |  FROM orders),
-        |dim AS (
-        |  SELECT prio_n AS dim_prio,
-        |    coalesce(prio_n, '(suppressed)') AS label
-        |  FROM (SELECT DISTINCT prio_n FROM lhs))
-        |SELECT label, count(1) AS n, round(sum(o_totalprice), 2) AS revenue
-        |FROM lhs JOIN dim ON lhs.prio_n IS NOT DISTINCT FROM dim.dim_prio
-        |GROUP BY label ORDER BY label""".stripMargin,
-
-    // the oracle states the ANSI definition directly — smallest value
-    // whose cume_dist reaches p — rather than trusting two engines'
-    // quantile_disc variants to share an indexing convention
-    "q111_percentile_disc" ->
-      """WITH cd AS (
-        |  SELECT o_orderpriority, o_totalprice,
-        |    cume_dist() OVER (PARTITION BY o_orderpriority
-        |      ORDER BY o_totalprice) AS cd
-        |  FROM orders)
-        |SELECT o_orderpriority,
-        |  min(CASE WHEN cd >= 0.25 THEN o_totalprice END) AS p25_disc,
-        |  min(CASE WHEN cd >= 0.5  THEN o_totalprice END) AS p50_disc,
-        |  min(CASE WHEN cd >= 0.9  THEN o_totalprice END) AS p90_disc,
-        |  count(1) AS n
-        |FROM cd GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    // rank() semantics are identical; the boundary ties survive on both
-    "q110_topk_ties" ->
-      """SELECT o_orderstatus, rk, o_orderdate, o_orderkey, o_totalprice
-        |FROM (
-        |  SELECT o_orderkey, o_orderstatus, o_orderdate, o_totalprice,
-        |    rank() OVER (PARTITION BY o_orderstatus
-        |      ORDER BY o_orderdate DESC) AS rk
-        |  FROM orders)
-        |WHERE rk <= 3
-        |ORDER BY o_orderstatus, rk, o_orderkey""".stripMargin,
-
-    // DuckDB GROUPING with multiple args == Spark grouping_id bit vector
-    "q108_grouping_id" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  count(1) AS n,
-        |  CAST(GROUPING(l_returnflag) AS INTEGER) AS g_flag,
-        |  CAST(GROUPING(l_linestatus) AS INTEGER) AS g_status,
-        |  CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
-        |FROM lineitem
-        |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST"""
-        .stripMargin,
-
-    // quantile_cont == Spark percentile (exact interpolated, q103
-    // precedent); the clip is least/greatest on identical doubles
-    "q107_winsorize" ->
-      """WITH cuts AS (
-        |  SELECT l_returnflag,
-        |    quantile_cont(l_extendedprice, 0.05) AS p05,
-        |    quantile_cont(l_extendedprice, 0.95) AS p95
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT l.l_orderkey, l.l_linenumber, l.l_returnflag,
-        |  l.l_extendedprice,
-        |  round(least(greatest(l.l_extendedprice, c.p05), c.p95), 6)
-        |    AS winsorized,
-        |  (l.l_extendedprice < c.p05 OR l.l_extendedprice > c.p95)
-        |    AS clipped
-        |FROM lineitem l JOIN cuts c USING (l_returnflag)
-        |ORDER BY l.l_orderkey, l.l_linenumber""".stripMargin,
-
-    // same op tree for the interpolation arithmetic (pv + (nv-pv)*frac,
-    // frac an exact int division) so the doubles agree bit-for-bit
-    "q106_interpolate" ->
-      """WITH obs AS (
-        |  SELECT user_id, CAST(ts AS DATE) AS d, round(sum(value), 6) AS v
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        |sp AS (
-        |  SELECT user_id,
-        |    CAST(unnest(generate_series(min(d), max(d), INTERVAL 1 DAY)) AS DATE) AS d
-        |  FROM obs GROUP BY user_id),
-        |j AS (
-        |  SELECT sp.user_id, sp.d, o.v FROM sp
-        |  LEFT JOIN obs o ON o.user_id = sp.user_id AND o.d = sp.d),
-        |w AS (
-        |  SELECT user_id, d, v,
-        |    last_value(v IGNORE NULLS) OVER bk AS pv,
-        |    last_value(CASE WHEN v IS NOT NULL THEN d END IGNORE NULLS)
-        |      OVER bk AS pd,
-        |    first_value(v IGNORE NULLS) OVER fw AS nv,
-        |    first_value(CASE WHEN v IS NOT NULL THEN d END IGNORE NULLS)
-        |      OVER fw AS nd
-        |  FROM j
-        |  WINDOW bk AS (PARTITION BY user_id ORDER BY d
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |  fw AS (PARTITION BY user_id ORDER BY d
-        |    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT user_id, d,
-        |  round(CASE WHEN v IS NOT NULL THEN v
-        |    ELSE pv + (nv - pv) *
-        |      (CAST(date_diff('day', pd, d) AS DOUBLE) /
-        |        date_diff('day', pd, nd)) END, 6) AS value,
-        |  (v IS NOT NULL) AS observed
-        |FROM w ORDER BY user_id, d""".stripMargin,
-
-    // dominance stated directly: the O(n²) NOT EXISTS the engine side
-    // replaces with a partitioned scan
-    "q105_skyline" ->
-      """WITH u AS (
-        |  SELECT o_orderkey, o_totalprice, o_orderdate FROM orders
-        |  WHERE o_orderpriority = '1-URGENT')
-        |SELECT o_orderkey, o_totalprice, o_orderdate FROM u o
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM u o2
-        |  WHERE o2.o_totalprice >= o.o_totalprice
-        |    AND o2.o_orderdate <= o.o_orderdate
-        |    AND (o2.o_totalprice > o.o_totalprice
-        |         OR o2.o_orderdate < o.o_orderdate))
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // same island arithmetic on integer day numbers — no interval math
-    // to disagree on
-    "q99_streaks" ->
-      """WITH d AS (
-        |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
-        |r AS (
-        |  SELECT user_id, d,
-        |    date_diff('day', DATE '1970-01-01', d) -
-        |      row_number() OVER (PARTITION BY user_id ORDER BY d) AS grp
-        |  FROM d)
-        |SELECT user_id, min(d) AS streak_start, max(d) AS streak_end,
-        |  count(1) AS streak_days
-        |FROM r GROUP BY user_id, grp
-        |ORDER BY user_id, streak_start""".stripMargin,
-
-    // unnest of a [NULL] placeholder emulates the outer explode
-    "q104_explode_outer" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '\s+'),
-        |      x -> length(x) >= 8) AS ws
-        |  FROM documents)
-        |SELECT doc_id,
-        |  unnest(CASE WHEN len(ws) = 0 THEN [CAST(NULL AS VARCHAR)]
-        |         ELSE ws END) AS long_word
-        |FROM w
-        |ORDER BY doc_id, long_word NULLS FIRST""".stripMargin,
-
-    // quantile_cont(0.5) is the same exact interpolated median Spark's
-    // median() computes; the mode derivation mirrors the Spark ranking
-    "q103_mode_median" ->
-      """WITH c AS (
-        |  SELECT o_orderstatus, o_orderpriority, count(1) AS n
-        |  FROM orders GROUP BY 1, 2),
-        |m AS (
-        |  SELECT o_orderstatus, o_orderpriority AS mode_priority,
-        |    row_number() OVER (PARTITION BY o_orderstatus
-        |      ORDER BY n DESC, o_orderpriority) AS rk
-        |  FROM c),
-        |md AS (
-        |  SELECT o_orderstatus,
-        |    round(quantile_cont(o_totalprice, 0.5), 6) AS median_price
-        |  FROM orders GROUP BY 1)
-        |SELECT md.o_orderstatus AS o_orderstatus, md.median_price,
-        |  m.mode_priority
-        |FROM md JOIN m ON md.o_orderstatus = m.o_orderstatus AND m.rk = 1
-        |ORDER BY md.o_orderstatus""".stripMargin,
-
-    // the bounded-heap operator must equal the classic window idiom
-    "q102_topk_per_group" ->
-      """WITH r AS (
-        |  SELECT o_orderkey, o_custkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_totalprice DESC, o_orderkey) AS rk
-        |  FROM orders)
-        |SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM r WHERE rk <= 2
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    // the same first-occurrence derivation (DuckDB would also accept a
-    // native windowed COUNT(DISTINCT) for the total, but the flag form
-    // keeps both columns on one definition); BIGINT casts pin the
-    // HUGEINT window sums to Spark's long
-    "q101_window_distinct" ->
-      """WITH f AS (
-        |  SELECT event_id, user_id, ts, event_type,
-        |    CASE WHEN row_number() OVER (
-        |      PARTITION BY user_id, event_type ORDER BY ts, event_id) = 1
-        |    THEN 1 ELSE 0 END AS fst
-        |  FROM events)
-        |SELECT event_id, user_id, ts, event_type,
-        |  CAST(sum(fst) OVER (PARTITION BY user_id) AS BIGINT)
-        |    AS n_types_total,
-        |  CAST(sum(fst) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS n_types_so_far
-        |FROM f ORDER BY event_id""".stripMargin,
-
     // global argmin over |gap| with the exact tie ladder the operator
     // implements: nearer wins; equal distance → backward; same-instant
     // rows are backward matches; backward ties take the LARGEST
     // signup_id, forward ties the smallest
-    "q100_asof_nearest" ->
+    Query("q100_asof_nearest", Oracle(
       """WITH p AS (SELECT event_id, user_id, ts, value FROM events
         |           WHERE event_type = 'purchase'),
         |s AS (SELECT user_id, ts, event_id AS signup_id, value AS signup_value
@@ -762,24 +728,17 @@ object Relational6 {
         |  j.signup_value AS asof_signup_value
         |FROM p LEFT JOIN (SELECT event_id, signup_value FROM j WHERE rk = 1) j
         |  ON p.event_id = j.event_id
-        |ORDER BY p.event_id""".stripMargin,
-
-    "q98_date_spine" ->
-      """WITH o AS (SELECT * FROM orders WHERE o_totalprice > 490000),
-        |b AS (
-        |  SELECT date_trunc('month', min(o_orderdate)) AS lo,
-        |         date_trunc('month', max(o_orderdate)) AS hi
-        |  FROM o),
-        |spine AS (
-        |  SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 MONTH)) AS DATE) AS month
-        |  FROM b),
-        |m AS (
-        |  SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
-        |    round(sum(o_totalprice), 2) AS revenue, count(1) AS n_orders
-        |  FROM o GROUP BY 1)
-        |SELECT spine.month,
-        |  coalesce(m.revenue, 0.0) AS revenue,
-        |  coalesce(m.n_orders, 0) AS n_orders
-        |FROM spine LEFT JOIN m USING (month) ORDER BY month""".stripMargin
+        |ORDER BY p.event_id""".stripMargin)) { (s, dir) =>
+      val ev = t(s, dir, "events")
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select("event_id", "user_id", "ts", "value")
+      val signups = ev.filter(col("event_type") === "signup")
+        .select(col("user_id"), col("ts"), col("event_id").as("signup_id"),
+          col("value").as("signup_value"))
+      graft.operators.AsOfJoin.asofNearest(purchases, signups,
+          Seq("user_id"), "ts", "ts",
+          payloadCols = Seq("signup_value"), rightTieBreak = "signup_id")
+        .orderBy("event_id")
+    }
   )
 }

@@ -169,6 +169,19 @@ class EtlSpec extends AnyFunSuite {
     assert(readBack.columns.forall(c => c == c.toUpperCase))
   }
 
+  test("avro source feeds an avro sink through the runner, balanced") {
+    import graft.sources.Sources
+    val work = Files.createTempDirectory("graft_etl_avro").toString
+    Sources.write(Generator.addresses(spark, 2000), "avro", s"$work/addresses")
+    EtlRunner.registerSource(spark, "addresses_avro", s"$work/addresses", "avro")
+    val job = EtlJob(name = "addr_avro",
+      extract = "SELECT id, city FROM addresses_avro WHERE id < 1500",
+      write = "addr_avro", mode = "overwrite")
+    val r = new EtlRunner(spark).runJob(job, work, "avro")
+    assert(r.balanced && r.rowsSent == 1499)
+    assert(Sources.read(spark, Sources.SourceSpec("avro", s"$work/addr_avro")).count() == 1499)
+  }
+
   test("runJob keeps the caller's job group and still counts its own stages") {
     val work = Files.createTempDirectory("graft_etl_group").toString
     spark.range(0, 3000, 1, 3).toDF("id").createOrReplaceTempView("group_src")

@@ -218,5 +218,11 @@ class GraphSpec extends AnyFunSuite {
     val expect = Set((1L, 2L, 1L), (1L, 3L, 1L), (2L, 3L, 2L))
     assert(pairs(0L) == expect, "uncapped (join) tier")
     assert(pairs(3L) == expect, "capped (exec) tier")
+    // a cap past Int.MaxValue cannot prune: it is the exact result
+    assert(pairs(Int.MaxValue.toLong + 1) == expect, "cap above Int.MaxValue")
+    // a negative cap is a caller error, not a silent "no cap"
+    intercept[IllegalArgumentException](pairs(-1L))
+    intercept[IllegalArgumentException](
+      Graph.neighborJaccard(rel, "e", "i", minCommon = 1, maxItemDeg = -1L))
   }
 }

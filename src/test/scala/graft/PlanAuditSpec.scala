@@ -142,18 +142,10 @@ class PlanAuditSpec extends AnyFunSuite {
   // and watermark discipline is asserted in StreamingSpec instead.
   // ---------------------------------------------------------------------
 
-  // the one INTENTIONAL cartesian: q10 is the cross-join operator itself
-  private val cartesianOk = Set("q10_cross_join")
-  // joins that legitimately stay sort-merge after AQE — not a size
-  // question but an operator-support one: Spark's BroadcastHashJoin
-  // cannot build either side of a FULL OUTER join, and q39's
-  // INTERSECT ALL / EXCEPT ALL rewrite inherits the same full-outer
-  // shape. These shuffle on their keys at any scale, by semantics.
-  // full-outer semantics cannot broadcast (both sides must surface
-  // unmatched rows), so a shuffle join IS the correct shape — q109's
-  // CDC diff is the same class as q7
-  private val smjOk = Set("q7_full_outer", "q39_multiset_ops",
-    "q109_snapshot_diff")
+  // the operators a key may keep, read from its declaration (each
+  // allowance states its reason there)
+  private lazy val allowed: Map[String, Set[String]] =
+    SparkEntry.declared.map(d => d.key -> d.allow.map(_.operator).toSet).toMap
 
   // operators allowed ABOVE the single presentation sort: output shaping
   // only. A global Sort below anything else is a mid-plan total order —
@@ -222,9 +214,9 @@ class PlanAuditSpec extends AnyFunSuite {
       // legitimately fix it (e.g. broadcast a post-aggregate side whose
       // size statically read as unknown)
       if (suspicious) { df.collect(); p = current }
-      if (p.contains("CartesianProduct") && !cartesianOk(name))
+      if (p.contains("CartesianProduct") && !allowed(name)("CartesianProduct"))
         bad += s"$name: CartesianProduct"
-      if (p.contains("SortMergeJoin") && !smjOk(name))
+      if (p.contains("SortMergeJoin") && !allowed(name)("SortMergeJoin"))
         bad += s"$name: SortMergeJoin survived AQE"
       globalSortViolation(p).foreach(v => bad += s"$name: $v")
     }
