@@ -28,6 +28,12 @@ object Tables {
   private[graft] def parquetSchema(spark: SparkSession, path: String) =
     schemaCache.getOrElseUpdate(path, spark.read.parquet(path).schema)
 
+  /** Parquet read with the schema from [[parquetSchema]] — the one read
+    * path for fixtures ([[load]]) and the persisted index artifacts
+    * (AnnIndex, DedupIndex): footer inference is paid once per path. */
+  private[graft] def readStable(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+
   /** Replace a cached schema with the one just WRITTEN to `path`
     * (ADVICE r16): writers that overwrite an artifact (AnnIndex.save,
     * DedupIndex.save) must not leave a stale entry — an explicit stale
@@ -70,7 +76,7 @@ object Tables {
     // column lands as micro-precision TimestampType, oracle-comparable.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/$name.parquet"
-    val df = spark.read.schema(parquetSchema(spark, path)).parquet(path)
+    val df = readStable(spark, path)
     if (name == "events") {
       guardNanos(df, s"$dir/$name")
       normalizeTs(df)

@@ -53,7 +53,7 @@ object AnnIndex {
 
   /** Reload the PQ codebooks: codebooks(j)(c) = centroid vector. */
   def loadCodebooks(spark: SparkSession, root: String): Seq[Seq[Seq[Double]]] = {
-    val rows = readStable(spark, s"$root/model")
+    val rows = graft.Tables.readStable(spark, s"$root/model")
       .filter(col("kind") === "pq")
       .select("subspace", "centroid", "vec")
       .collect()
@@ -64,7 +64,7 @@ object AnnIndex {
 
   /** Reload the coarse (IVF) centroids; empty for a flat-PQ index. */
   def loadCoarse(spark: SparkSession, root: String): Seq[Seq[Double]] =
-    readStable(spark, s"$root/model")
+    graft.Tables.readStable(spark, s"$root/model")
       .filter(col("kind") === "coarse")
       .select("centroid", "vec")
       .collect()
@@ -72,14 +72,7 @@ object AnnIndex {
 
   /** Reload the coded corpus — the search stage's scan relation. */
   def loadCodes(spark: SparkSession, root: String): DataFrame =
-    readStable(spark, s"$root/codes")
-
-  /** Schema-stable parquet read (round 16): index artifacts keep one
-    * schema per path for the life of the process, so the footer-read
-    * schema inference (~280 ms/call on the driver, see Tables) is paid
-    * once per path instead of per load. */
-  private def readStable(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(graft.Tables.parquetSchema(spark, path)).parquet(path)
+    graft.Tables.readStable(spark, s"$root/codes")
 
   /** Streaming index ingest — the freshness half of the
     * train→persist→serve loop: each micro-batch of NEW vectors is

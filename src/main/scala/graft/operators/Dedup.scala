@@ -293,13 +293,6 @@ object Dedup {
     df.join(dupIds, df(idCol) === dupIds("_eid"), "left_anti")
   }
 
-  /** Embedding-cosine near-dup dedup, LSH tier: identical keep-lowest-id
-    * semantics, but candidate pairs come from multi-table SRP-LSH bucket
-    * collisions instead of the full cross product — the 100 TB path
-    * (shuffle key = (table, bucket); candidates ~linear in n). Recall
-    * < 1 means a missed candidate KEEPS a duplicate (never drops a
-    * unique row) — the safe failure direction for training-data dedup.
-    * The spec quantifies agreement with the exact tier. */
   /** SemDeDup-style semantic dedup (Abbas et al. 2023, public arXiv
     * 2303.09540): k-means the embedding space into `nCells` clusters,
     * then drop rows with a lower-id neighbor at cosine ≥ `threshold`
@@ -313,32 +306,15 @@ object Dedup {
     * [[embeddingDedup]] exactly — the DuckDB-oracle configuration
     * (same NOT EXISTS semantics); the pruned regime's drop set is a
     * SUBSET of the exact tier's (only same-cell pairs are compared),
-    * quantified in DedupSpec. `trainFraction` < 1 fits the clusterer
-    * on a seeded sample, as in [[Similarity.ivfKnn]]. */
+    * quantified in DedupSpec. The cells come from
+    * [[Similarity.assignCells]] (seeded driver-side k-means on a
+    * layout-invariant hashed sample), so the kept set does not depend
+    * on how `df` is partitioned. */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
-                    threshold: Double, nCells: Int, seed: Long = 7L,
-                    trainFraction: Double = 1.0): DataFrame = {
+                    threshold: Double, nCells: Int, seed: Long = 7L): DataFrame = {
     val v = df.select(col(idCol).as("_eid"), col(vecCol).cast("array<double>").as("_v"))
       .withColumn("_norm", Similarity.l2norm(col("_v")))
-    val celled =
-      if (nCells <= 1) v.withColumn("_cell", lit(0))
-      else {
-        import org.apache.spark.ml.clustering.KMeans
-        import org.apache.spark.ml.functions.array_to_vector
-        val train = if (trainFraction >= 1.0) v else v.sample(trainFraction, seed)
-        val model = new KMeans().setK(nCells).setSeed(seed).setMaxIter(20)
-          .setFeaturesCol("_fv").setPredictionCol("_c")
-          .fit(train.select(array_to_vector(col("_v")).as("_fv")))
-        val centroids = model.clusterCenters.map(_.toArray.toSeq).toSeq
-        // nearest centroid via literal expressions (the ivfKnn form);
-        // squared distance up to the ||v||² constant: ||c||² − 2 v·c
-        val dists = array(centroids.map { cen =>
-          lit(cen.map(x => x * x).sum) -
-            lit(2.0) * Similarity.dot(col("_v"), typedLit(cen))
-        }: _*)
-        v.withColumn("_cell",
-          (array_position(dists, array_min(dists)) - 1).cast("int"))
-      }
+    val celled = Similarity.assignCells(v, "_v", "_cell", nCells, seed)
     val a = celled.select(col("_eid").as("_ida"), col("_cell"),
       col("_v").as("_va"), col("_norm").as("_na"))
     val b = celled.select(col("_eid").as("_idb"), col("_cell"),
@@ -351,6 +327,13 @@ object Dedup {
     df.join(dupIds, df(idCol) === dupIds("_eid"), "left_anti")
   }
 
+  /** Embedding-cosine near-dup dedup, LSH tier: identical keep-lowest-id
+    * semantics, but candidate pairs come from multi-table SRP-LSH bucket
+    * collisions instead of the full cross product — the 100 TB path
+    * (shuffle key = (table, bucket); candidates ~linear in n). Recall
+    * < 1 means a missed candidate KEEPS a duplicate (never drops a
+    * unique row) — the safe failure direction for training-data dedup.
+    * The spec quantifies agreement with the exact tier. */
   def embeddingDedupAnn(df: DataFrame, idCol: String, vecCol: String,
                         threshold: Double, nBits: Int = 0, nTables: Int = 16,
                         dim: Int = 64, seed: Long = 7L): DataFrame = {

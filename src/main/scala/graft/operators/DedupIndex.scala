@@ -70,14 +70,7 @@ object DedupIndex {
 
   /** Reload the persisted index relation. */
   def load(spark: SparkSession, root: String): DataFrame =
-    readStable(spark, s"$root/index")
-
-  /** Schema-stable parquet read (round 16): index artifacts keep one
-    * schema per path for the life of the process, so the footer-read
-    * schema inference (~280 ms/call on the driver, see Tables) is paid
-    * once per path instead of per load. */
-  private def readStable(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(graft.Tables.parquetSchema(spark, path)).parquet(path)
+    graft.Tables.readStable(spark, s"$root/index")
 
   /** Near-dup pairs (id_a from `newDocs`, id_b in the index) with exact
     * shingle-set Jaccard ≥ `threshold`. Only `newDocs` is shingled;
@@ -93,7 +86,7 @@ object DedupIndex {
       // sidecar-ids anti-join (doc-count-sized on BOTH sides — never the
       // posting-list index): an indexed id whose corpus text is absent
       // or NULL would silently drop its candidate pairs in verify
-      val uncovered = readStable(spark, s"$root/ids")
+      val uncovered = graft.Tables.readStable(spark, s"$root/ids")
         .join(corpus.filter(col(textCol).isNotNull)
           .select(col(idCol).as("id_b")), Seq("id_b"), "left_anti")
         .limit(5).collect().map(_.get(0))

@@ -614,29 +614,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** IVF (inverted-file) approximate kNN: a k-means coarse quantizer
-    * partitions the corpus into `nCells` Voronoi cells; each query
-    * probes only its `nProbe` nearest cells and ranks candidates by
-    * exact cosine. The centroid table is tiny (nCells × dim) and ships
-    * as literals, so cell assignment is a per-row argmin with the
-    * codegen dot product — no shuffle, no broadcast join. The candidate
-    * join shuffles on the cell id: each cell holds ~n/nCells corpus
-    * rows, so probe cost is ~(nProbe/nCells)·n per query instead of n.
-    *
-    * `trainFraction` < 1 fits the quantizer on a seeded sample — at
-    * 100 TB the quantizer needs thousands of vectors, not all of them.
-    * Fitting is a separate training pass (standard IVF build phase);
-    * the index (centroids + cell assignment) would be persisted in a
-    * real deployment rather than rebuilt per query.
-    *
-    * Above `centroidJoinFrom` cells the literal-expression assignment
-    * is replaced by a broadcast join against a centroid DataFrame:
-    * nCells separate `dot(v, literal)` expressions grow the generated
-    * method linearly, and at the 10⁴-10⁵ cells a 100 TB corpus wants,
-    * Janino either trips the 64 KB method limit or bails to interpreted
-    * evaluation exactly where throughput matters. The join path costs
-    * one map-side-combined shuffle of the corpus (argmin per row) but
-    * keeps every expression small and codegen'd. */
   /** Per-dimension standardization (z-scoring) of an embedding column:
     * dimension means/σ come from one posexplode aggregate whose result
     * is DIMENSION-sized (the model-sized-collects-only discipline — d
@@ -669,13 +646,13 @@ object Similarity {
     * shuffle — `TakeOrderedAndProject` at scale, unlike `sample()`
     * whose draw changes with physical partitioning), the clusterer is
     * the driver-side seeded [[lloyds]] (the pqTrain discipline — the
-    * model is nCells×d, never corpus-sized), and assignment is nearest
-    * centroid via literal-constant distance expressions (pure codegen,
-    * no shuffle, no model object on the executors). Same input → same
-    * cells regardless of partitioning, which the ML KMeans fit cannot
-    * promise (k-means|| init is order-dependent). Returns the input
-    * plus an integer `cellCol` — the semantic-bucket key behind IVF
-    * probing, SemDeDup, and cluster-balanced sampling. */
+    * model is nCells×d, never corpus-sized), and assignment is
+    * [[nearestCell]] (pure codegen, no shuffle, no model object on the
+    * executors). Same input → same cells regardless of partitioning,
+    * which the ML KMeans fit cannot promise (k-means|| init is
+    * order-dependent). Returns the input plus an integer `cellCol` —
+    * the semantic-bucket key behind SemDeDup ([[Dedup.semanticDedup]])
+    * and cluster-balanced sampling. */
   def assignCells(df: DataFrame, vecCol: String, cellCol: String,
                   nCells: Int, seed: Long = 7L,
                   maxTrainRows: Int = 4096): DataFrame = {
@@ -686,52 +663,75 @@ object Similarity {
       .limit(maxTrainRows)
       .collect().map(_.getSeq[Double](0).toArray)
     require(pts.nonEmpty, "no vectors to cluster")
-    val centroids = lloyds(pts, nCells, seed)
-    val vc = col(vecCol).cast("array<double>")
-    // one fused codegen pass over the centroid matrix — the composed
-    // nCells-dot-subtree array degrades to interpreted eval (see
-    // graft.functions.CellDists)
-    val dists = graft.functions.VectorFunctions.cell_dists(
-      vc, centroids.map(_.toSeq))
     df.withColumn(cellCol,
-      (array_position(dists, array_min(dists)) - 1).cast("int"))
+      nearestCell(col(vecCol).cast("array<double>"), lloyds(pts, nCells, seed)))
   }
 
+  /** Nearest centroid id (0-based) of `vc` — the one cell-assignment
+    * column of the IVF tier; ties go to the lower cell id. The argmin
+    * runs over [[graft.functions.CellDists]]: squared L2 up to the
+    * ||v||² constant (||c||² − 2 v·c), ONE fused codegen pass that ships
+    * the centroid matrix as a single `double[]` reference at any nCells
+    * (a composed nCells-dot-subtree array degrades to interpreted
+    * evaluation). */
+  private def nearestCell(vc: Column, centroids: Seq[Seq[Double]]): Column = {
+    val d = graft.functions.VectorFunctions.cell_dists(vc, centroids)
+    (array_position(d, array_min(d)) - 1).cast("int")
+  }
+
+  /** Per query row of `q` (keyed `query_id`): its `nProbe` nearest cells
+    * as one row each, with `_cell`, `_cd` (its CellDists entry, as in
+    * [[nearestCell]]) and the per-query cell rank `_pr` (ties → lower
+    * cell id). Queries are the small side, so the nCells-way explode +
+    * window ranks a bounded set. */
+  private def probeCells(q: DataFrame, qvCol: String,
+                         centroids: Seq[Seq[Double]], nProbe: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val wp = Window.partitionBy("query_id").orderBy(asc("_cd"), asc("_cell"))
+    q.select(col("*"),
+        posexplode(graft.functions.VectorFunctions.cell_dists(col(qvCol), centroids))
+          .as(Seq("_cell", "_cd")))
+      .withColumn("_pr", row_number().over(wp))
+      .filter(col("_pr") <= nProbe)
+  }
+
+  /** IVF (inverted-file) approximate kNN: a k-means coarse quantizer
+    * partitions the corpus into `nCells` Voronoi cells; each query
+    * probes only its `nProbe` nearest cells and ranks candidates by
+    * exact cosine. Cell assignment is a per-row [[nearestCell]] — no
+    * shuffle, no broadcast join, codegen'd at any nCells. The candidate
+    * join shuffles on the cell id: each cell holds ~n/nCells corpus
+    * rows, so probe cost is ~(nProbe/nCells)·n per query instead of n.
+    * Fitting is a separate training pass (standard IVF build phase);
+    * the index (centroids + cell assignment) would be persisted in a
+    * real deployment rather than rebuilt per query. */
   def ivfKnn(corpus: DataFrame, queries: DataFrame, idCol: String,
              vecCol: String, k: Int, nCells: Int = 16, nProbe: Int = 4,
-             seed: Long = 7L, trainFraction: Double = 1.0,
-             centroidJoinFrom: Int = 256): DataFrame =
+             seed: Long = 7L): DataFrame =
     ivfKnnFromCentroids(corpus, queries, idCol, vecCol, k,
-      ivfTrainCentroids(corpus, vecCol, nCells, seed, trainFraction),
-      nProbe, centroidJoinFrom)
+      ivfTrainCentroids(corpus, vecCol, nCells, seed), nProbe)
 
-  /** The coarse-quantizer fit alone: k-means centroids over (a seeded
-    * fraction of) the corpus — split out so an nProbe SWEEP (c94's
-    * recall curve) trains ONCE and probes many times instead of
-    * refitting an identical model per operating point. */
+  /** The coarse-quantizer fit alone: ML k-means centroids over the
+    * corpus — split out so an nProbe SWEEP (c94's recall curve) trains
+    * ONCE and probes many times instead of refitting an identical model
+    * per operating point. */
   def ivfTrainCentroids(corpus: DataFrame, vecCol: String, nCells: Int,
-                        seed: Long = 7L,
-                        trainFraction: Double = 1.0): Seq[Seq[Double]] = {
+                        seed: Long = 7L): Seq[Seq[Double]] = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    val c = corpus.select(col(vecCol).cast("array<double>").as("cv"))
-    val trainSet =
-      if (trainFraction >= 1.0) c else c.sample(trainFraction, seed)
     val model = new KMeans().setK(nCells).setSeed(seed).setMaxIter(20)
       .setFeaturesCol("_fv").setPredictionCol("_cell")
-      .fit(trainSet.select(array_to_vector(col("cv")).as("_fv")))
+      .fit(corpus.select(array_to_vector(col(vecCol).cast("array<double>")).as("_fv")))
     model.clusterCenters.map(_.toArray.toSeq).toSeq
   }
 
   /** IVF search against a pre-trained coarse quantizer. */
   def ivfKnnFromCentroids(corpus: DataFrame, queries: DataFrame, idCol: String,
                           vecCol: String, k: Int,
-                          centroids: Seq[Seq[Double]], nProbe: Int,
-                          centroidJoinFrom: Int = 256): DataFrame = {
+                          centroids: Seq[Seq[Double]], nProbe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wr = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("nn_id"))
-    ivfScoredCandidates(corpus, queries, idCol, vecCol, centroids, nProbe,
-        centroidJoinFrom)
+    ivfScoredCandidates(corpus, queries, idCol, vecCol, centroids, nProbe)
       .drop("_pr")
       .withColumn("rank", row_number().over(wr))
       .filter(col("rank") <= k)
@@ -755,13 +755,12 @@ object Similarity {
   def ivfKnnSweepFromCentroids(corpus: DataFrame, queries: DataFrame,
                                idCol: String, vecCol: String, k: Int,
                                centroids: Seq[Seq[Double]],
-                               probeCounts: Seq[Int],
-                               centroidJoinFrom: Int = 256): Seq[(Int, DataFrame)] = {
+                               probeCounts: Seq[Int]): Seq[(Int, DataFrame)] = {
     import org.apache.spark.sql.expressions.Window
     require(probeCounts.nonEmpty, "ivfKnnSweepFromCentroids needs >= 1 arm")
     val wr = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("nn_id"))
     val scored = Ckpt.cut(ivfScoredCandidates(corpus, queries, idCol, vecCol,
-      centroids, probeCounts.max, centroidJoinFrom))
+      centroids, probeCounts.max))
     probeCounts.map { p =>
       p -> scored.filter(col("_pr") <= p).drop("_pr")
         .withColumn("rank", row_number().over(wr))
@@ -775,67 +774,17 @@ object Similarity {
     * can slice smaller operating points out of a larger one. */
   private def ivfScoredCandidates(corpus: DataFrame, queries: DataFrame,
                                   idCol: String, vecCol: String,
-                                  centroids: Seq[Seq[Double]], nProbe: Int,
-                                  centroidJoinFrom: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val nCells = centroids.size
-    val c = corpus
+                                  centroids: Seq[Seq[Double]],
+                                  nProbe: Int): DataFrame = {
+    val assigned = corpus
       .select(col(idCol).as("nn_id"), col(vecCol).cast("array<double>").as("cv"))
       .withColumn("cn", l2norm(col("cv")))
+      .withColumn("_cell", nearestCell(col("cv"), centroids))
     val q = queries
       .select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
       .withColumn("qn", l2norm(col("qv")))
-    val wp = Window.partitionBy("query_id").orderBy(asc("_cd"), asc("_cell"))
-    val (assigned, probes) = if (nCells < centroidJoinFrom) {
-      // squared distance to each centroid, up to the ||v||² constant:
-      // ||c||² − 2 v·c (same argmin) — ONE fused codegen pass over the
-      // centroid matrix (graft.functions.CellDists; the composed
-      // nCells-dot-subtree array degrades to interpreted eval)
-      def cellDists(vc: Column): Column =
-        graft.functions.VectorFunctions.cell_dists(vc, centroids.map(_.toSeq))
-      def nearestCell(vc: Column): Column = {
-        val d = cellDists(vc)
-        (array_position(d, array_min(d)) - 1).cast("int")
-      }
-      val asg = c.withColumn("_cell", nearestCell(col("cv")))
-      // per query: nProbe nearest cells (queries are the small side —
-      // the nCells-way explode + window ranks a bounded set)
-      val prb = q
-        .select(col("query_id"), col("qv"), col("qn"),
-          posexplode(cellDists(col("qv"))).as(Seq("_cell", "_cd")))
-        .withColumn("_pr", row_number().over(wp))
-        .filter(col("_pr") <= nProbe)
-        .select(col("query_id"), col("qv"), col("qn"), col("_cell"), col("_pr"))
-      (asg, prb)
-    } else {
-      // broadcast the (tiny) centroid table; distance is ONE small
-      // expression per joined row. Corpus argmin = map-side-combined
-      // min_by keyed on a SURROGATE row id — grouping on idCol would
-      // silently collapse duplicate-id rows that the literal path keeps
-      // (duplicate business keys are a documented fixture reality).
-      // Tie-break on cell id matches the literal path's array_position
-      // (first minimum wins).
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val centDf = broadcast(centroids.zipWithIndex
-        .map { case (cen, i) => (i, cen, cen.map(x => x * x).sum) }
-        .toDF("_cell", "_cen", "_cen2"))
-      val dist = col("_cen2") - lit(2.0) * dot(col("cv"), col("_cen"))
-      val asg = c.withColumn("_rid", monotonically_increasing_id())
-        .crossJoin(centDf)
-        .withColumn("_cd", dist)
-        .groupBy(col("_rid"))
-        .agg(min_by(struct(col("nn_id"), col("_cell"), col("cv"), col("cn")),
-          struct(col("_cd"), col("_cell"))).as("_m"))
-        .select(col("_m.nn_id").as("nn_id"), col("_m._cell").as("_cell"),
-          col("_m.cv").as("cv"), col("_m.cn").as("cn"))
-      val prb = q.crossJoin(centDf)
-        .withColumn("_cd", col("_cen2") - lit(2.0) * dot(col("qv"), col("_cen")))
-        .withColumn("_pr", row_number().over(wp))
-        .filter(col("_pr") <= nProbe)
-        .select(col("query_id"), col("qv"), col("qn"), col("_cell"), col("_pr"))
-      (asg, prb)
-    }
+    val probes = probeCells(q, "qv", centroids, nProbe)
+      .select(col("query_id"), col("qv"), col("qn"), col("_cell"), col("_pr"))
     // each corpus row lives in exactly one cell and probed cells are
     // distinct per query → no duplicate (query, nn) pairs to dedup;
     // ranking/top-k live in the public entry points
@@ -905,12 +854,6 @@ object Similarity {
                      iters: Int = 20): Seq[Seq[Double]] = {
     val d = pts.head.length
     val rnd = new scala.util.Random(seed)
-    def sqDist(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0
-      var i = 0
-      while (i < d) { val df = a(i) - b(i); s += df * df; i += 1 }
-      s
-    }
     // k-means++: first centroid uniform, each next drawn ∝ D²(point)
     val cents = new Array[Array[Double]](k)
     cents(0) = pts(rnd.nextInt(pts.length)).clone
@@ -940,16 +883,7 @@ object Similarity {
       val sums = Array.fill(k)(new Array[Double](d))
       val counts = new Array[Int](k)
       pts.foreach { p =>
-        var best = 0
-        var bd = Double.MaxValue
-        var c = 0
-        while (c < k) {
-          var dist = 0.0
-          var i = 0
-          while (i < d) { val df = p(i) - cents(c)(i); dist += df * df; i += 1 }
-          if (dist < bd) { bd = dist; best = c }
-          c += 1
-        }
+        val best = nearestLocal(p, cents)
         counts(best) += 1
         var i = 0
         while (i < d) { sums(best)(i) += p(i); i += 1 }
@@ -968,6 +902,28 @@ object Similarity {
       it += 1
     }
     cents.map(_.toSeq).toSeq
+  }
+
+  /** Driver-side nearest centroid of `p` by squared L2 (first minimum
+    * wins) — the local twin of [[nearestCell]], used inside [[lloyds]]
+    * and to route training points to their coarse cell. */
+  private def nearestLocal(p: Array[Double], cents: Array[Array[Double]]): Int = {
+    var best = 0
+    var bd = Double.MaxValue
+    var c = 0
+    while (c < cents.length) {
+      val dist = sqDist(p, cents(c))
+      if (dist < bd) { bd = dist; best = c }
+      c += 1
+    }
+    best
+  }
+
+  private def sqDist(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < a.length) { val df = a(i) - b(i); s += df * df; i += 1 }
+    s
   }
 
   /** Product-quantization kNN with ADC scoring and exact rerank — the
@@ -1049,7 +1005,7 @@ object Similarity {
 
   /** PQ code array for a vector column: per-subspace argmin against
     * literal centroids — squared L2 up to the ||v_sub||² constant
-    * (||c||² − 2 v_sub·c, the ivfKnn literal form). One fused codegen
+    * (||c||² − 2 v_sub·c, the [[nearestCell]] form). One fused codegen
     * pass ([[graft.functions.PqCodes]]; the composed m×ksub-subtree
     * array degrades to interpreted eval — see SrpSignatures). */
   private def pqCodes(codebooks: Seq[Seq[Seq[Double]]], dim: Int)
@@ -1110,11 +1066,11 @@ object Similarity {
     * pruning (~nProbe/nCells of the corpus touched) with PQ's
     * compression (no vector moves in the scan).
     *
-    * `byResidual` (the FAISS default, true): PQ codes quantize the
-    * RESIDUAL `v − c_cell` rather than the raw vector — residual
-    * magnitudes are much smaller than vector magnitudes, so the same
-    * codebook budget buys far less quantization error. The encode-side
-    * argmin stays a literal-expression projection via the decomposition
+    * PQ codes quantize the RESIDUAL `v − c_cell` (the FAISS default)
+    * rather than the raw vector — residual magnitudes are much smaller
+    * than vector magnitudes, so the same codebook budget buys far less
+    * quantization error. The encode-side argmin stays a literal-expression
+    * projection via the decomposition
     * `argmin_cb ||r_j − cb||² = argmin_cb [||cb||² − 2 v_j·cb + 2 c_j·cb]`
     * where `c_j·cb` is a per-(cell, subspace, centroid) CONSTANT —
     * precomputed driver-side and shipped as one nCells-long literal
@@ -1138,84 +1094,52 @@ object Similarity {
                vecCol: String, k: Int, dim: Int = 64, nCells: Int = 16,
                nProbe: Int = 4, m: Int = 8, ksub: Int = 16,
                rerank: Int = 50, seed: Long = 7L,
-               trainFraction: Double = 1.0,
-               byResidual: Boolean = true): DataFrame = {
+               trainFraction: Double = 1.0): DataFrame = {
     // fail before the expensive train/encode stages, not inside search
     require(rerank >= k, s"rerank $rerank must be >= k $k")
     val (coarse, codebooks) =
-      ivfPqTrain(corpus, vecCol, dim, nCells, m, ksub, seed, trainFraction,
-        byResidual)
-    val coded = ivfPqEncode(corpus, idCol, vecCol, coarse, codebooks, dim,
-      byResidual)
+      ivfPqTrain(corpus, vecCol, dim, nCells, m, ksub, seed, trainFraction)
+    val coded = ivfPqEncode(corpus, idCol, vecCol, coarse, codebooks, dim)
     ivfPqSearch(coded, coarse, codebooks, corpus, queries, idCol, vecCol, k,
-      dim, nProbe, ksub, rerank, byResidual)
+      dim, nProbe, ksub, rerank)
   }
 
   /** Train stage of [[ivfPqKnn]]: coarse quantizer + PQ codebooks, both
-    * driver-side on ONE bounded seeded sample (see [[pqTrain]]).
-    * Returned model is what a serving tier persists ([[AnnIndex]]). */
+    * driver-side on ONE bounded seeded sample (see [[pqTrain]]); the
+    * codebooks train on the sample's residuals — the same distribution
+    * the encoder will quantize. Returned model is what a serving tier
+    * persists ([[AnnIndex]]). */
   def ivfPqTrain(corpus: DataFrame, vecCol: String, dim: Int, nCells: Int,
                  m: Int, ksub: Int, seed: Long = 7L,
-                 trainFraction: Double = 1.0, byResidual: Boolean = true)
+                 trainFraction: Double = 1.0)
       : (Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) = {
     val pts = trainSample(corpus, vecCol, dim, seed, trainFraction, 10000)
     // seed - 1: the coarse quantizer must not share a subspace fit's seed
     val coarse = lloyds(pts, nCells, seed - 1)
-    def nearestCellLocal(p: Array[Double]): Int = {
-      var best = 0; var bd = Double.MaxValue
-      var c = 0
-      while (c < coarse.length) {
-        var s = 0.0; var i = 0
-        while (i < dim) { val df = p(i) - coarse(c)(i); s += df * df; i += 1 }
-        if (s < bd) { bd = s; best = c }
-        c += 1
-      }
-      best
+    val coarseArr = coarse.map(_.toArray).toArray
+    val residuals = pts.map { p =>
+      val cen = coarseArr(nearestLocal(p, coarseArr))
+      Array.tabulate(dim)(i => p(i) - cen(i))
     }
-    // residual mode trains the codebooks on the sample's residuals —
-    // the same distribution the encoder will quantize
-    val codebookPts =
-      if (!byResidual) pts
-      else pts.map { p =>
-        val cen = coarse(nearestCellLocal(p))
-        Array.tabulate(dim)(i => p(i) - cen(i))
-      }
-    (coarse, pqCodebooksFromSample(codebookPts, dim, m, ksub, seed))
+    (coarse, pqCodebooksFromSample(residuals, dim, m, ksub, seed))
   }
-
-  /** ||c||² − 2 v·c per coarse cell — argmin over it is the nearest
-    * cell (the ||v||² constant cancels). One fused codegen pass
-    * ([[graft.functions.CellDists]]). */
-  private def coarseCellDists(coarse: Seq[Seq[Double]])(vc: Column): Column =
-    graft.functions.VectorFunctions.cell_dists(vc, coarse)
 
   /** Encode stage of [[ivfPqKnn]], separable for persistence: each row
-    * becomes (nn_id, coarse cell, m int codes, norm). Deterministic for
-    * a given model, so a persisted encode equals a fresh one. */
+    * becomes (nn_id, coarse cell, m int residual codes, norm). The
+    * residual argmin's cell-dependent correction 2·(c_j·cb) is
+    * precomputed per (subspace, code, cell) into one fused codegen pass
+    * ([[graft.functions.PqCodesResidual]]). Deterministic for a given
+    * model, so a persisted encode equals a fresh one. */
   def ivfPqEncode(corpus: DataFrame, idCol: String, vecCol: String,
                   coarse: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
-                  dim: Int, byResidual: Boolean = true): DataFrame = {
-    val m = codebooks.length
-    val dsub = dim / m
-    // residual encode: per (j, cb) the cell-dependent correction
-    // 2·(c_j·cb), precomputed per (subspace, code, cell) into one fused
-    // codegen pass (graft.functions.PqCodesResidual)
-    def residualCodes(vc: Column, cellCol: Column): Column =
-      graft.functions.VectorFunctions.pq_codes_residual(
-        vc, cellCol, codebooks, coarse, dim)
-    val cellAssigned = corpus
+                  dim: Int): DataFrame =
+    corpus
       .select(col(idCol).as("nn_id"), col(vecCol).cast("array<double>").as("cv"))
       .withColumn("cn", l2norm(col("cv")))
-      .withColumn("_cell", {
-        val d = coarseCellDists(coarse)(col("cv"))
-        (array_position(d, array_min(d)) - 1).cast("int")
-      })
-    (if (byResidual)
-        cellAssigned.withColumn("codes", residualCodes(col("cv"), col("_cell")))
-      else
-        cellAssigned.withColumn("codes", pqCodes(codebooks, dim)(col("cv"))))
+      .withColumn("_cell", nearestCell(col("cv"), coarse))
+      .withColumn("codes", graft.functions.VectorFunctions.pq_codes_residual(
+        col("cv"), col("_cell"), codebooks, coarse, dim))
       .select("nn_id", "_cell", "codes", "cn")
-  }
 
   /** Search stage of [[ivfPqKnn]] over an already-encoded corpus — the
     * serving path (`coded` may be reloaded from parquet via
@@ -1224,38 +1148,24 @@ object Similarity {
   def ivfPqSearch(coded: DataFrame, coarse: Seq[Seq[Double]],
                   codebooks: Seq[Seq[Seq[Double]]], corpus: DataFrame,
                   queries: DataFrame, idCol: String, vecCol: String, k: Int,
-                  dim: Int, nProbe: Int, ksub: Int, rerank: Int,
-                  byResidual: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+                  dim: Int, nProbe: Int, ksub: Int, rerank: Int): DataFrame = {
     import graft.functions.VectorFunctions.adc_score
     require(rerank >= k, s"rerank $rerank must be >= k $k")
-    def cellDists(vc: Column): Column = coarseCellDists(coarse)(vc)
     val qv = queries
       .select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
       .withColumn("qn", l2norm(col("qv")))
-    // one row per (query, probed cell): queries are the small side, so
-    // the nCells-way explode + window ranks a bounded set (ivfKnn form);
-    // residual mode keeps _cd — the ADC correction recovers q·c_cell
-    // from it without a second dot product
-    val wp = Window.partitionBy("query_id").orderBy(asc("_cd"), asc("_cell"))
-    val probeCols = Seq("query_id", "qn", "adc", "_cell") ++
-      (if (byResidual) Seq("_cd") else Nil)
-    val qProbes = qv
-      .withColumn("adc", pqAdcTable(codebooks, dim)(col("qv")))
-      .select(col("query_id"), col("qn"), col("adc"),
-        posexplode(cellDists(col("qv"))).as(Seq("_cell", "_cd")))
-      .withColumn("_pr", row_number().over(wp))
-      .filter(col("_pr") <= nProbe)
-      .select(probeCols.map(col): _*)
+    // one row per (query, probed cell), keeping _cd — the residual ADC
+    // correction recovers q·c_cell from it without a second dot product
+    val qProbes = probeCells(
+        qv.withColumn("adc", pqAdcTable(codebooks, dim)(col("qv"))),
+        "qv", coarse, nProbe)
+      .select("query_id", "qn", "adc", "_cell", "_cd")
     // residual ADC adds back q·c_cell: _cd = ||c||² − 2 q·c, so
     // q·c = (||c||² − _cd)/2 with ||c||² a literal lookup by cell id
+    val cen2: Seq[Double] = coarse.map(c => c.map(x => x * x).sum)
     val approxDot =
-      if (!byResidual) adc_score(col("codes"), col("adc"), ksub)
-      else {
-        val cen2: Seq[Double] = coarse.map(c => c.map(x => x * x).sum)
-        (element_at(typedLit(cen2), col("_cell") + 1) - col("_cd")) / lit(2.0) +
-          adc_score(col("codes"), col("adc"), ksub)
-      }
+      (element_at(typedLit(cen2), col("_cell") + 1) - col("_cd")) / lit(2.0) +
+        adc_score(col("codes"), col("adc"), ksub)
     val scored = coded.join(broadcast(qProbes), Seq("_cell"))
       .filter(col("nn_id") =!= col("query_id"))
       .select(col("query_id"), col("nn_id"),

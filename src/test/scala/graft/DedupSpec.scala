@@ -164,6 +164,14 @@ class DedupSpec extends AnyFunSuite {
     assert(exactDrops > 0)
     val dropRecall = caught.toDouble / exactDrops
     assert(dropRecall >= 0.5, s"clustered tier caught $caught of $exactDrops drops")
+    // the cells are layout-invariant: the same rows under another
+    // partitioning keep the same set
+    Seq(1, 7).foreach { n =>
+      val relaid = Dedup.semanticDedup(e.repartition(n), "vec_id", "embedding",
+          0.4, nCells = 4)
+        .select("vec_id").as[Long].collect().toSet
+      assert(relaid == clustered, s"kept set changed under repartition($n)")
+    }
   }
 
   test("dupClusters: transitive chains collapse to the min id; singletons self-label") {

@@ -1229,45 +1229,45 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("ivfKnnFromCentroids: literal and broadcast-join assignment paths " +
-    "are value-identical, and full-probe equals brute force, on random vectors") {
+  test("ivfKnnFromCentroids: full probe equals brute force on random " +
+    "vectors, at few cells and at >= 256 cells") {
     import graft.operators.Similarity
     import org.apache.spark.sql.functions.col
     val dim = 4
+    def coords(n: Int) = Gen.listOfN(n, Gen.listOfN(dim,
+      Gen.chooseNum(-1000, 1000).map(_ / 997.0)))
     val gen = for {
       n  <- Gen.chooseNum(6, 30)
-      vs <- Gen.listOfN(n, Gen.listOfN(dim,
-              Gen.chooseNum(-1000, 1000).map(_ / 997.0)))
+      vs <- coords(n)
       nc <- Gen.chooseNum(2, 5)
-      cs <- Gen.listOfN(nc, Gen.listOfN(dim,
-              Gen.chooseNum(-1000, 1000).map(_ / 997.0)))
+      cs <- coords(nc)
       k  <- Gen.chooseNum(1, 4)
     } yield (vs, cs, k)
-    samples(gen, 8).foreach { case (vs, cs, k) =>
+    // the fixed case: 300 cells, past the count where one literal
+    // expression per centroid would overflow the JVM's 64 KB method
+    // limit — assignment and probing must stay exact there too
+    val wide = coords(40).flatMap(vs => coords(300).map(cs => (vs, cs, 3)))
+    val wideCase = samples(wide, 1)
+    assert(wideCase.map(_._2.size) == Seq(300))
+    (samples(gen, 8) ++ wideCase).foreach { case (vs, cs, k) =>
       val e = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
         .toDF("vec_id", "embedding")
       val qs = e.filter(col("vec_id") % 3 === 0)
       val cents = cs.map(_.toSeq)
-      def run(joinFrom: Int, nProbe: Int) =
-        Similarity.ivfKnnFromCentroids(e, qs, "vec_id", "embedding",
-            k, cents, nProbe, centroidJoinFrom = joinFrom)
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-          .toSet
-      (1 to cents.size).foreach { p =>
-        val lit = run(256, p)  // nCells < 256 → literal-expression path
-        val bc  = run(1, p)    // nCells >= 1 → broadcast-join path
-        assert(lit == bc, s"paths differ at nProbe=$p: vs=$vs cs=$cs")
-      }
       // nProbe = nCells probes every cell → exact search; tie-breaks
       // and the cosine expression are shared with the oracle, so the
       // result sets must be identical, not merely recall-1.0
-      val full  = run(256, cents.size)
+      val full = Similarity.ivfKnnFromCentroids(e, qs, "vec_id", "embedding",
+          k, cents, cents.size)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+        .toSet
       val brute = Similarity.bruteForceKnn(e, qs, "vec_id", "embedding", k)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
         .toSet
-      assert(full == brute, s"full-probe != brute force: vs=$vs cs=$cs k=$k")
+      assert(full == brute,
+        s"full-probe != brute force at ${cents.size} cells: vs=$vs k=$k")
     }
   }
 

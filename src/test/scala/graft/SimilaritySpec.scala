@@ -188,19 +188,12 @@ class SimilaritySpec extends AnyFunSuite {
     // shortlist), so on this hardest-case fixture the shortlist is
     // wider than pqKnn's; clustered corpora need far less.
     val exact = exactRanked.map(t => (t._1, t._2))
-    // residual encoding (the FAISS default): codes quantize v − c_cell
+    // residual encoding: codes quantize v − c_cell
     val pruned = Similarity.ivfPqKnn(e, queries, "vec_id", "embedding", k,
         dim = 64, nCells = 16, nProbe = 8, m = 16, ksub = 16, rerank = 100, seed = 7L)
       .select("query_id", "nn_id").as[(Long, Long)].collect().toSet
     val recall = pruned.intersect(exact).size.toDouble / exact.size
     assert(recall >= 0.8, s"IVF-PQ residual recall $recall < 0.8")
-    // raw-vector codes (by_residual=false): same floor, covers the path
-    val prunedRaw = Similarity.ivfPqKnn(e, queries, "vec_id", "embedding", k,
-        dim = 64, nCells = 16, nProbe = 8, m = 16, ksub = 16, rerank = 100,
-        seed = 7L, byResidual = false)
-      .select("query_id", "nn_id").as[(Long, Long)].collect().toSet
-    val recallRaw = prunedRaw.intersect(exact).size.toDouble / exact.size
-    assert(recallRaw >= 0.8, s"IVF-PQ raw recall $recallRaw < 0.8")
     // probe-all + unbounded rerank: every row scanned, every row
     // reranked exactly → equals brute force rank-for-rank regardless of
     // either quantizer's quality (what lets c44 share the kNN oracle)
@@ -217,20 +210,6 @@ class SimilaritySpec extends AnyFunSuite {
       .select("query_id", "nn_id", "rank").as[(Long, Long, Int)].collect().toSet
     assert(full == exactRanked,
       s"missing: ${exactRanked.diff(full)}; extra: ${full.diff(exactRanked)}")
-  }
-
-  test("ivfKnn: broadcast-join centroid path equals the literal path") {
-    val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    val queries = e.filter($"vec_id" < 20)
-    // same params, assignment via literal expressions vs broadcast join:
-    // identical distance formula → identical cells → identical output
-    val lit = Similarity.ivfKnn(e, queries, "vec_id", "embedding", 5,
-        nCells = 16, nProbe = 8, seed = 7L)
-      .select("query_id", "nn_id", "rank").as[(Long, Long, Int)].collect().toSet
-    val joined = Similarity.ivfKnn(e, queries, "vec_id", "embedding", 5,
-        nCells = 16, nProbe = 8, seed = 7L, centroidJoinFrom = 1)
-      .select("query_id", "nn_id", "rank").as[(Long, Long, Int)].collect().toSet
-    assert(joined == lit)
   }
 
   test("srp signatures pack into a long: >31 bits stay distinct, 64 rejected") {

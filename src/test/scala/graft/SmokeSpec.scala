@@ -2,17 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every declared query runs on sf0.001 and yields a sane result; every
-  * oracle key refers to a declared query. The full value-level check is
-  * tools/check.py against DuckDB (the driver's t2 mimic). */
+/** Every declared query runs on sf0.001 and yields a sane result. The
+  * full value-level check is tools/check.py against DuckDB. */
 class SmokeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
-
-  test("oracleSql keys are a subset of queries keys") {
-    val unknown = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(unknown.isEmpty, s"oracles without queries: $unknown")
-  }
 
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)

@@ -12,10 +12,15 @@ driver hash then compares 1.0 vs Spark's int64 1 — value-equal, hash-
 different. A fetchall()-repr compare (rounds 1-2) cannot see that.
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir> [skipOracles]
+                              [--parent <parentVerifyOutDir>]
   skipOracles: comma-separated query names whose oracle is skipped
   (checked rows-only instead), or the literal "quadratic" for the
   known set of shingle-self-join oracles that are impractically slow
   at sf0.1 (fine at the driver's sf0.01).
+  --parent: a Verify dump of the parent commit. Every rows-only key's
+  rows must then equal the parent's as a multiset (DuckDB EXCEPT ALL,
+  0 rows in both directions) — the refactor check for keys that have
+  no SQL oracle. Any difference fails the run.
 """
 import sys, os, json, math
 import duckdb
@@ -60,7 +65,24 @@ def rows_of(df):
         if cols else [() for _ in range(len(df))]
 
 
-def main(sf_dir, out_dir, skip=""):
+def parent_diff(con, path, parent_path):
+    """(rows only in `path`, rows only in `parent_path`) by EXCEPT ALL,
+    columns matched by name; None if the column sets differ."""
+    def cols(p):
+        return sorted(r[0] for r in con.execute(
+            f"DESCRIBE SELECT * FROM read_parquet('{p}/*.parquet')").fetchall())
+    names = cols(path)
+    if names != cols(parent_path):
+        return None
+    sel = ", ".join(f'"{c}"' for c in names)
+    def count(a, b):
+        return con.execute(
+            f"SELECT count(*) FROM (SELECT {sel} FROM read_parquet('{a}/*.parquet') "
+            f"EXCEPT ALL SELECT {sel} FROM read_parquet('{b}/*.parquet'))").fetchone()[0]
+    return count(path, parent_path), count(parent_path, path)
+
+
+def main(sf_dir, out_dir, skip="", parent_dir=None):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -126,6 +148,7 @@ def main(sf_dir, out_dir, skip=""):
         print(f"PASS {name} ({len(g)} rows)")
         n_pass += 1
     # rows-only queries (no oracle)
+    n_same = n_diff = 0
     for d in sorted(os.listdir(out_dir)):
         p = os.path.join(out_dir, d)
         if os.path.isdir(p) and d not in oracle:
@@ -136,10 +159,39 @@ def main(sf_dir, out_dir, skip=""):
                 print(f"{status} {d} ({n} rows)")
             except Exception as e:
                 print(f"ROWS-ONLY-FAIL {d}: {e}")
+            if parent_dir is None:
+                continue
+            pp = os.path.join(parent_dir, d)
+            detail = "no parent dump"
+            if os.path.isdir(pp):
+                try:
+                    diff = parent_diff(con, p, pp)
+                    if diff is None:
+                        detail = "columns differ"
+                    elif diff == (0, 0):
+                        detail = None
+                    else:
+                        detail = (f"{diff[0]} rows not in parent, "
+                                  f"{diff[1]} parent rows missing")
+                except Exception as e:
+                    detail = str(e)
+            if detail is None:
+                print(f"PARENT-SAME {d}")
+                n_same += 1
+            else:
+                print(f"PARENT-DIFF {d}: {detail}")
+                n_diff += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
-    return 1 if n_fail else 0
+    if parent_dir is not None:
+        print(f"rows-only vs parent: {n_same} same, {n_diff} differ")
+    return 1 if n_fail or n_diff else 0
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2],
-                  sys.argv[3] if len(sys.argv) > 3 else ""))
+    args = sys.argv[1:]
+    parent = None
+    if "--parent" in args:
+        i = args.index("--parent")
+        parent = args[i + 1]
+        del args[i:i + 2]
+    sys.exit(main(args[0], args[1], args[2] if len(args) > 2 else "", parent))
